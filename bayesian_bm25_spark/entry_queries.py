@@ -60,11 +60,7 @@ def _spread(df: DataFrame, sf_dir: str, table: str, min_bytes: int = 0) -> DataF
     multi-MB single split would serialize its Arrow token-count pass)."""
     import os
 
-    if os.environ.get("BB25_ENTRY_SPREAD", "1") == "0":  # A/B kill-switch
-        return df
-    p = int(
-        os.environ.get("BB25_ENTRY_SPREAD_P", "0")
-    ) or df.sparkSession.sparkContext.defaultParallelism
+    p = df.sparkSession.sparkContext.defaultParallelism
     path = f"{sf_dir}/{table}.parquet"
     try:
         size = (
@@ -101,8 +97,6 @@ def _docs_tokens(
 
 
 def _corpus_postings(spark: SparkSession, sf_dir: str, method: str = "lucene") -> tuple:
-    import os
-
     from bayesian_bm25_spark.operators.index_build import _local_tf
 
     docs = _docs_tokens(spark, sf_dir)
@@ -112,9 +106,9 @@ def _corpus_postings(spark: SparkSession, sf_dir: str, method: str = "lucene") -
     # of the df join) and Spark does not dedupe common subplans — so the
     # Arrow token-count pass would run twice per query.  Persist it for
     # the duration of the query (the same reuse build_index applies;
-    # values and the oracle SQL are unchanged).  The cache is scoped to
-    # the query's lineage and reclaimed by the ContextCleaner once the
-    # returned frames are dropped.  ONLY the tf input is spread, and
+    # values and the oracle SQL are unchanged).  The cache is NOT
+    # reclaimed when the returned frames are dropped: it stays until it
+    # is unpersisted or the session ends.  ONLY the tf input is spread, and
     # only when the table exceeds 4 MB: the stats agg and query-side
     # tokenize are cheap JVM work, and at sub-MB inputs the exchange +
     # worker-pool fork overhead measurably exceeds the single-warm-task
@@ -122,9 +116,7 @@ def _corpus_postings(spark: SparkSession, sf_dir: str, method: str = "lucene") -
     # 21.8-28.6s spread at sf0.1) — while a multi-MB single split would
     # serialize the Arrow token-count pass.
     tf_docs = _docs_tokens(spark, sf_dir, spread=True, min_bytes=4 << 20)
-    tf = _local_tf(tf_docs)
-    if os.environ.get("BB25_ENTRY_TF_PERSIST", "1") != "0":  # A/B kill-switch
-        tf = tf.persist()
+    tf = _local_tf(tf_docs).persist()
     postings = compute_postings(
         docs, n_docs, avgdl, IndexConfig(method=method), tf_source=tf
     )
@@ -1086,7 +1078,7 @@ GROUP BY n_name
 
 
 def q_compressed_postings(spark, sf_dir):
-    """Distributed posting-list encode/decode round-trip (codec + salted
+    """Distributed posting-list encode/decode round-trip (codec + partial
     merge are binary/iterative — checked by pytest goldens; here the
     driver gets a rows-only sanity check)."""
     import pandas as pd

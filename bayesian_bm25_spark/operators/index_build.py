@@ -5,30 +5,26 @@ the build resumes from any boundary — north rule):
 
     pages(url, warc_ts, html, text, lang)
       └─ docs:      tokenize (Arrow p_udf-free: pure Column split/filter)
-      └─ postings:  explode tokens → groupBy(term, doc_id) tf  [shuffle 1]
-                    → join df per term [shuffle 2, AQE-broadcast when small]
-                    → eager impact column (codegen) → laid out by
+      └─ postings:  row-local tf count (mapInPandas, no shuffle)
+                    → join df per term [one shuffle, AQE-broadcast when
+                    small] → eager impact column (codegen) → laid out by
                     term_bucket = pmod(xxhash64(term), n_buckets)
       └─ posting_lists: map-side varbyte partials → ONE shuffle of
-                    compressed bytes → term merge (one write;
-                    checkpoint_segments=True restores the two-stage
-                    layout)  [north rule storage tier; queries default
-                    to flat postings].  The merge holds every term's
-                    decoded arrays, so it also emits df/max/min impact,
-                    the θ-pass prefix_cutoff and per-block maxima as
-                    extra columns …
-      └─ term_stats: column-pruned derivation of posting_lists (r7
-                    fusion; payload bytes unread).  Standalone postings
-                    scan kept for build_compressed=False / legacy
-                    checkpoints (fused_term_artifacts=False)
+                    compressed bytes → term merge, written once  [north
+                    rule storage tier; queries default to flat postings].
+                    The merge holds every term's decoded arrays, so it
+                    also emits df/max/min impact, the θ-pass
+                    prefix_cutoff and per-block maxima as extra columns
+      └─ term_stats: column-pruned derivation of posting_lists (payload
+                    bytes unread); build_compressed=False scans postings
       └─ block_max:  explode of the posting_lists block arrays (same)
       └─ params.json: seeded pseudo-query sampling → α/β/base-rate on
                     the driver (numpy-exact, mirrors reference protocol)
 
 Skew: the Zipf head ("the"-like terms) is handled twice — the flat
 postings shuffle relies on AQE skew-join splitting, and the compressed
-build salts ``groupBy(term, salt)`` so no single task collects a hot
-term's full list before the merge stage stitches segments.
+build encodes one partial per Arrow batch of the postings scan, so the
+head term reaches its merge task pre-chunked.
 """
 
 from __future__ import annotations
@@ -36,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -77,52 +74,20 @@ class IndexConfig:
     block_size: int = 128
     prefix_len: int = 128  # MaxScore θ-pass prefix depth
     n_buckets: int = 32  # term-hash layout buckets (partition pruning)
-    n_salts: int = 8  # salt factor for the compressed posting-list build
+    # write posting_lists and derive term_stats / block_max from its
+    # merge; False skips the compressed lists and scans postings for
+    # the two tables instead
     build_compressed: bool = True
-    # encode varbyte partial posting lists map-side (per Arrow batch,
-    # zero pre-shuffle) so the ONLY exchange of the posting-list build
-    # carries compressed bytes; False restores the salted row-shuffle
-    # (repartition by (term, salt) then encode) — see
-    # _build_compressed_lists and the BENCH/BASELINE.md §6 A/B
-    mapside_partials: bool = True
-    # checkpoint the intermediate segments table (old two-write layout);
-    # off = phase 1 streams into the merge through one shuffle and the
-    # compressed artifact is written once (see _build_compressed_lists)
-    checkpoint_segments: bool = False
-    # derive term_stats and block_max from the posting-list merge (the
-    # merge already holds every term's decoded doc/tf/impact arrays, so
-    # df/max/min impact, the θ-pass prefix_cutoff and the per-block
-    # maxima come out as extra columns for free) instead of re-scanning
-    # the postings checkpoint once per stage — round-6's parallel group
-    # ran THREE full postings scans (term_stats 10.9s, block_max 10.9s,
-    # compressed_lists 11.5s at sf0.1; 39/34/55s at 1M docs).  False
-    # (or env BB25_FUSED_ARTIFACTS=0) restores the standalone scans.
-    fused_term_artifacts: bool = True
     pseudo_query_seed: int = 42
     pseudo_query_sample: int = 50
-    # row-local tf counting (zero token-stream shuffle); False restores
-    # the explode + groupBy(term, doc_id) plan
-    local_tf: bool = True
-    # broadcast the per-term df aggregate into the impact join when the
-    # measured vocabulary is at most this many terms (0 = off).  OFF BY
-    # DEFAULT — measured negative (BENCH/BASELINE.md r6 addendum §6):
-    # the tf-by-term exchange this removes (992 MB at 1M docs, the
-    # build's heaviest stage) is not waste, it is the CLUSTERING stage.
-    # Its term-hash output partitioning aligns with term_bucket =
-    # pmod(xxhash64(term), n_buckets), so each write task lands in ~1-2
-    # bucket dirs with term-clustered, RLE-friendly files; the
-    # broadcast path writes doc-ordered rows that scatter every term
-    # across every write task's files — postings phase −10%, every
-    # downstream postings scan (term_stats/block_max/posting-list
-    # merge) ~3× slower.  Keep for corpora whose downstream stages
-    # don't re-scan postings by term.
-    broadcast_vocab_max: int = 0
 
     def to_dict(self) -> dict:
         return {k: getattr(self, k) for k in self.__dataclass_fields__}
 
     @classmethod
     def from_dict(cls, d: dict) -> "IndexConfig":
+        # unknown keys are dropped: params.json of an index built by an
+        # older version may list fields that no longer exist
         return cls(**{k: v for k, v in d.items() if k in cls.__dataclass_fields__})
 
 
@@ -320,13 +285,15 @@ def compute_postings(
 ) -> DataFrame:
     """Lazy postings plan from docs(doc_id, tokens, doc_len).
 
-    Default (``cfg.local_tf``): row-local tf via ``_local_tf`` (no
-    token-stream shuffle) → per-term df agg (small) → join (AQE
-    broadcasts small vocab; one shuffle of the tf rows otherwise) →
-    eager impact column (pure codegen) → term-bucket layout column for
-    partition pruning.  ``local_tf=False`` keeps the explode →
-    groupBy(term, doc) plan (two full shuffles of the tf rows: the
-    grouping and the df join).
+    Row-local tf via ``_local_tf`` (no token-stream shuffle) → per-term
+    df agg (small) → join (AQE broadcasts small vocab; one shuffle of
+    the tf rows otherwise) → eager impact column (pure codegen) →
+    term-bucket layout column for partition pruning.
+
+    The df join is not forced to a broadcast: its term-hash output
+    partitioning keeps the written files term-clustered, and a forced
+    broadcast made every downstream postings scan ~3× slower
+    (BENCH/BASELINE.md r6 addendum §6).
 
     ``tf_source`` (doc_id, doc_len, term, tf) overrides the tf
     computation entirely — the incremental-append path passes the old
@@ -337,33 +304,10 @@ def compute_postings(
     cfg = cfg or IndexConfig()
     if tf_source is not None:
         tf = tf_source.select("doc_id", "doc_len", "term", "tf")
-    elif getattr(cfg, "local_tf", True):
-        tf = _local_tf(docs)
     else:
-        tf = (
-            docs.select("doc_id", "doc_len", F.explode("tokens").alias("term"))
-            .groupBy("term", "doc_id", "doc_len")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
+        tf = _local_tf(docs)
     df_per_term = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    # The planner can't prove df_per_term small — it derives from the
-    # Arrow tf source, which has no stats — so the join plans as an
-    # exchange of EVERY tf row by term (round-6 event-log audit: 992 MB
-    # shuffled, 620 MB remote, the heaviest stage of the whole build).
-    # Materialize the aggregate (tiny output; one pass over tf, cached
-    # in the build path) and broadcast it when the measured vocabulary
-    # is under cfg.broadcast_vocab_max: the probe side then flows
-    # narrowly from the tf cache into impact + write with no exchange.
-    # Webscale vocabularies above the threshold keep the shuffle join.
-    df_pt_cached = None
-    bmax = int(getattr(cfg, "broadcast_vocab_max", 0) or 0)
-    if bmax > 0:
-        df_pt_cached = df_per_term.persist()
-        n_terms = df_pt_cached.count()
-        df_per_term = (
-            F.broadcast(df_pt_cached) if n_terms <= bmax else df_pt_cached
-        )
-    out = (
+    return (
         tf.join(df_per_term, "term")
         .withColumn(
             "impact",
@@ -381,13 +325,6 @@ def compute_postings(
         .withColumn("term_bucket", F.pmod(F.xxhash64("term"), F.lit(cfg.n_buckets)))
         .select("term_bucket", "term", "doc_id", "tf", "doc_len", "df", "impact")
     )
-    # cleanup handle: the build unpersists this (tiny: one row per
-    # term) after the stage write, alongside the tf cache
-    out._bb25_df_pt = df_pt_cached
-    return out
-
-
-from contextlib import contextmanager
 
 
 @contextmanager
@@ -491,7 +428,10 @@ def build_index(
 
     ``tf_source``: precomputed (doc_id, doc_len, term, tf) facts that
     replace the tokenize-and-count pass — the incremental-append path
-    (see ``add_documents(reuse_tf=True)``)."""
+    (see ``add_documents(reuse_tf=True)``).
+
+    Raises ``ValueError`` when resuming a posting_lists checkpoint that
+    lacks the term_stats columns; rebuild with ``force=True``."""
     with _read_split_cap(spark):
         return _build_index_impl(spark, pages, path, config, force, tf_source)
 
@@ -547,36 +487,14 @@ def _build_index_impl(
     # path (checkpoint exists) never builds the plan, so nothing is
     # cached there.
     tf_cached = None
-    df_pt_cached = None
 
     def build_postings() -> DataFrame:
-        nonlocal tf_cached, df_pt_cached
-
-        def _track(plan: DataFrame) -> DataFrame:
-            # compute_postings may persist the per-term df aggregate
-            # for the vocab-measured broadcast; keep the handle so the
-            # post-write cleanup below releases it with the tf cache
-            nonlocal df_pt_cached
-            df_pt_cached = getattr(plan, "_bb25_df_pt", None)
-            return plan
-
-        src = tf_source
-        if src is None and getattr(cfg, "local_tf", True):
-            src = _local_tf(docs)
-        if src is None:
-            return _track(compute_postings(docs, n_docs, avgdl, cfg))
-        if os.environ.get("BB25_TF_PERSIST", "1") == "0":
-            # A/B kill-switch (BENCH/BASELINE.md r5 §1): revert to the
-            # double-compute plan without the cache
-            return _track(
-                compute_postings(docs, n_docs, avgdl, cfg, tf_source=src)
-            )
+        nonlocal tf_cached
         # covers the append path too: its union's _local_tf(new docs)
         # leg would otherwise also execute twice
+        src = tf_source if tf_source is not None else _local_tf(docs)
         tf_cached = src.persist()
-        out = _track(
-            compute_postings(docs, n_docs, avgdl, cfg, tf_source=tf_cached)
-        )
+        out = compute_postings(docs, n_docs, avgdl, cfg, tf_source=tf_cached)
         # The cached probe pins the write's task count to the cache
         # partition count (32 tasks × 32 bucket dirs = 1024 tiny files
         # at 50k docs — measured to double every downstream postings
@@ -605,8 +523,6 @@ def _build_index_impl(
     )
     if tf_cached is not None:
         tf_cached.unpersist()
-    if df_pt_cached is not None:
-        df_pt_cached.unpersist()
     serial_phase["postings"] = round(time.time() - t_phase, 2)
 
     term_stats_dir = os.path.join(path, "term_stats")
@@ -656,13 +572,12 @@ def _build_index_impl(
     # was going at small-to-mid corpus sizes; outputs land in separate
     # checkpoint dirs, so resumability is unchanged.
     #
-    # FUSED default (cfg.fused_term_artifacts): the compressed-list
-    # merge already decodes every term's full posting arrays, so
-    # term_stats and block_max are derived from ITS checkpoint's extra
-    # columns (a tiny column-pruned scan — the payload bytes are never
-    # read) instead of each re-scanning the full postings checkpoint.
-    # One bulk postings pass instead of three; the derivations land in
-    # the same stage dirs, so resume/load_index are unchanged.
+    # With build_compressed, the compressed-list merge already decodes
+    # every term's full posting arrays, so term_stats and block_max are
+    # derived from ITS checkpoint's extra columns (a tiny column-pruned
+    # scan — the payload bytes are never read) instead of each
+    # re-scanning the full postings checkpoint: one bulk postings pass
+    # instead of three.
     from concurrent.futures import ThreadPoolExecutor
 
     t_group0 = time.time()
@@ -674,30 +589,24 @@ def _build_index_impl(
         phase_sec[name] = round(time.time() - t0, 2)
         return out
 
-    def submit_standalone(pool):
-        return (
-            pool.submit(
-                timed, "term_stats",
-                lambda: ckpt.run_stage(
-                    spark, term_stats_dir, build_term_stats,
-                    stage="term_stats", inputs=[postings_dir], force=force,
-                ),
-            ),
-            pool.submit(
-                timed, "block_max",
-                lambda: ckpt.run_stage(
-                    spark, block_max_dir, build_block_max,
-                    stage="block_max", inputs=[postings_dir], force=force,
-                ),
+    def term_artifacts(pool, src_dir: str, term_stats_fn, block_max_fn):
+        f_ts = pool.submit(
+            timed, "term_stats",
+            lambda: ckpt.run_stage(
+                spark, term_stats_dir, term_stats_fn,
+                stage="term_stats", inputs=[src_dir], force=force,
             ),
         )
+        f_bm = pool.submit(
+            timed, "block_max",
+            lambda: ckpt.run_stage(
+                spark, block_max_dir, block_max_fn,
+                stage="block_max", inputs=[src_dir], force=force,
+            ),
+        )
+        return f_ts.result(), f_bm.result()
 
-    fused = (
-        cfg.build_compressed
-        and getattr(cfg, "fused_term_artifacts", True)
-        and os.environ.get("BB25_FUSED_ARTIFACTS", "1") != "0"
-    )
-    with ThreadPoolExecutor(max_workers=5) as pool:
+    with ThreadPoolExecutor(max_workers=3) as pool:
         # params first: its chain (score 50 pseudo-queries → cache →
         # several small percentile/agg jobs) has the longest tail of
         # sequential driver round-trips, so giving it first claim on the
@@ -706,52 +615,21 @@ def _build_index_impl(
             timed, "params",
             lambda: _estimate_params(spark, docs, postings, cfg, n_docs),
         )
-        if fused:
-            list_dir = os.path.join(path, "posting_lists")
-
-            def fused_chain():
-                pl = timed(
-                    "compressed_lists",
-                    lambda: _build_compressed_lists(spark, postings, path, cfg, force),
-                )
-                if "max_impact" not in pl.columns:
-                    # resumed pre-fusion checkpoint without the stats
-                    # columns: fall back to the standalone scans
-                    f_ts, f_bm = submit_standalone(pool)
-                    return pl, f_ts.result(), f_bm.result()
-                f_ts = pool.submit(
-                    timed, "term_stats",
-                    lambda: ckpt.run_stage(
-                        spark, term_stats_dir,
-                        lambda: _derive_term_stats(pl, cfg.n_buckets),
-                        stage="term_stats", inputs=[list_dir], force=force,
-                    ),
-                )
-                f_bm = pool.submit(
-                    timed, "block_max",
-                    lambda: ckpt.run_stage(
-                        spark, block_max_dir,
-                        lambda: _derive_block_max(pl),
-                        stage="block_max", inputs=[list_dir], force=force,
-                    ),
-                )
-                return pl, f_ts.result(), f_bm.result()
-
-            f_chain = pool.submit(fused_chain)
-            posting_lists, term_stats, block_max = f_chain.result()
-        else:
-            f_term_stats, f_block_max = submit_standalone(pool)
-            f_compressed = (
-                pool.submit(
-                    timed, "compressed_lists",
-                    lambda: _build_compressed_lists(spark, postings, path, cfg, force),
-                )
-                if cfg.build_compressed
-                else None
+        if cfg.build_compressed:
+            posting_lists = timed(
+                "compressed_lists",
+                lambda: _build_compressed_lists(spark, postings, path, cfg, force),
             )
-            term_stats = f_term_stats.result()
-            block_max = f_block_max.result()
-            posting_lists = f_compressed.result() if f_compressed else None
+            term_stats, block_max = term_artifacts(
+                pool, os.path.join(path, "posting_lists"),
+                lambda: _derive_term_stats(posting_lists, cfg.n_buckets),
+                lambda: _derive_block_max(posting_lists),
+            )
+        else:
+            posting_lists = None
+            term_stats, block_max = term_artifacts(
+                pool, postings_dir, build_term_stats, build_block_max
+            )
         params = f_params.result()
     phase_sec["parallel_group"] = round(time.time() - t_group0, 2)
 
@@ -785,15 +663,6 @@ def _build_index_impl(
     )
 
 
-_SEGMENT_SCHEMA = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("salt", LongType(), False),
-        StructField("df_partial", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
-)
-
 _PARTIAL_SCHEMA = StructType(
     [
         StructField("term", StringType(), False),
@@ -808,7 +677,7 @@ _LIST_SCHEMA = StructType(
         StructField("df", LongType(), False),
         StructField("payload", BinaryType(), False),
         # term_stats / block_max by-products of the merge (see
-        # IndexConfig.fused_term_artifacts): the merge decodes every
+        # _build_compressed_lists): the merge decodes every
         # term's full (doc_id, tf, impact) arrays anyway, so these are
         # O(1) extra numpy reductions per term.  Readers of the
         # compressed lists select (term, df, payload) and never pay for
@@ -899,64 +768,31 @@ def _build_compressed_lists(
 ) -> DataFrame:
     """Compressed posting-list construction (north rule).
 
-    Default (``cfg.mapside_partials``): encode varbyte partials MAP-SIDE
-    — each Arrow batch of the postings scan is numpy-sorted by
-    (term, doc_id) and every term-run encoded into a delta+varbyte
-    partial with its partial df — then ONE shuffle by term carries only
-    compressed bytes (~10.5 B/posting vs ~35-40 B/posting struct rows)
-    into the merge, which decodes, argsort-stitches the doc-disjoint
-    partials, and re-encodes the global list (byte-identical to every
-    other path).  Skew needs no salt here: the Zipf head term arrives
-    pre-chunked one partial per batch per split, and the map side is
-    balanced by the scan's byte-sized splits.
+    Encode varbyte partials MAP-SIDE — each Arrow batch of the postings
+    scan is numpy-sorted by (term, doc_id) and every term-run encoded
+    into a delta+varbyte partial with its partial df — then ONE shuffle
+    by term carries only compressed bytes (~10.5 B/posting vs ~35-40
+    B/posting struct rows) into the merge, which decodes,
+    argsort-stitches the doc-disjoint partials, re-encodes the global
+    list (byte-identical to ``encode_posting_list`` over the term's
+    doc-sorted postings) and computes the term_stats / block_max
+    columns from the arrays it has decoded.  The merge is an
+    Arrow-batched ``mapInPandas`` over partition-sorted runs: per-batch
+    Python, per-group numpy.  The artifact is written once; the
+    postings checkpoint stays the recovery point.
 
-    Legacy salted path (``mapside_partials=False`` or env
-    ``BB25_MAPSIDE_PARTIALS=0`` for A/Bs): phase 1 repartitions raw rows
-    by (term, salt(doc_id)) — the Zipf head split across ``n_salts``
-    tasks — sorts within partitions, and encodes each contiguous
-    (term, salt) run; phase 2 repartitions by term and stitches.  Both
-    phases are Arrow-batched ``mapInPandas`` over partition-sorted runs:
-    per-batch Python, per-group numpy.
+    Skew needs no salt: the Zipf head term arrives pre-chunked, one
+    partial per Arrow batch per read split, and the map side is balanced
+    by the scan's byte-sized splits.
 
-    By default (``cfg.checkpoint_segments = False``) phase 1 STREAMS
-    into phase 2 through one shuffle — the full compressed artifact is
-    written once (posting_lists), not twice.  The intermediate segments
-    parquet bought little resumability (it is one pass from the
-    checkpointed postings table, which remains the recovery point) and
-    cost a full write + a full MB-row scan whose 4096-row columnar
-    batches needed a session-cloned reader-batch cap to avoid executor
-    OOM.  Per-partition shuffle volume in the streamed path is
-    ~total_compressed/n_part (a few MB) and per-row size is bounded by
-    the salt split, so the merge's Arrow batches stay small without any
-    cap.  Set ``checkpoint_segments=True`` to restore the old
-    stage-per-phase layout (e.g. to inspect segments)."""
-    seg_dir = os.path.join(path, "segments")
+    A resumed checkpoint without the term_stats columns (written before
+    the merge produced them) raises ``ValueError``: the index must be
+    rebuilt with ``force=True``."""
     list_dir = os.path.join(path, "posting_lists")
     postings_dir = os.path.join(path, "postings")
-    # over-partition the python encode stages 4× so uneven (term, salt)
-    # run lengths don't leave cores idle behind stragglers
+    # over-partition the python merge stage 4× so uneven per-term list
+    # lengths don't leave cores idle behind stragglers
     n_part = max(spark.sparkContext.defaultParallelism * 4, 8)
-
-    def encode_runs(batches):
-        def flush(g: dict) -> dict:
-            # rows arrive sorted by (term, salt, doc_id) already
-            payload = encode_posting_list(g["doc_id"], g["tf"], g["impact"])
-            return {
-                "term": g["term"][0],
-                "salt": int(g["salt"][0]),
-                "df_partial": len(g["doc_id"]),
-                "payload": payload,
-            }
-
-        yield from _run_grouped(batches, ["term", "salt"], flush)
-
-    def build_segments() -> DataFrame:
-        return (
-            postings.withColumn("salt", F.pmod(F.col("doc_id"), F.lit(cfg.n_salts)))
-            .repartition(n_part, "term", "salt")
-            .sortWithinPartitions("term", "salt", "doc_id")
-            .mapInPandas(encode_runs, schema=_SEGMENT_SCHEMA)
-        )
 
     def encode_partials(batches):
         # Map-side partial encode: sort each Arrow batch by
@@ -1031,9 +867,8 @@ def _build_compressed_lists(
         prefix_len, block_size = cfg.prefix_len, cfg.block_size
 
         def flush(g: dict) -> dict:
-            parts = [
-                decode_posting_list(bytes(x)) for x in g["payload"] if x
-            ] or [decode_posting_list(encode_posting_list([], [], []))]
+            # every partial holds >= 1 posting, so n >= 1 below
+            parts = [decode_posting_list(bytes(x)) for x in g["payload"]]
             doc_ids = np.concatenate([p[0] for p in parts])
             tfs = np.concatenate([p[1] for p in parts])
             impacts = np.concatenate([p[2] for p in parts])
@@ -1041,14 +876,6 @@ def _build_compressed_lists(
             doc_ids, tfs, impacts = doc_ids[order], tfs[order], impacts[order]
             n = len(doc_ids)
             payload = encode_posting_list(doc_ids, tfs, impacts)
-            if n == 0:  # defensive: runs are never empty in practice
-                return {
-                    "term": g["term"][0], "df": 0, "payload": payload,
-                    "max_impact": 0.0, "min_impact": 0.0,
-                    "prefix_cutoff": 0.0,
-                    "block_ids": np.zeros(0, dtype=np.int64),
-                    "block_maxes": np.zeros(0, dtype=np.float64),
-                }
             # prefix_cutoff = the B-th largest impact (min over the
             # row_number()<=B window of the standalone builder; ties at
             # the boundary share the same value, so sorting by impact
@@ -1069,93 +896,38 @@ def _build_compressed_lists(
 
         yield from _run_grouped(batches, ["term"], flush)
 
-    def merge_of(segments: DataFrame, order_cols=("term", "salt")) -> DataFrame:
+    def build_lists() -> DataFrame:
         return (
-            segments.repartition(n_part, "term")
-            .sortWithinPartitions(*order_cols)
+            build_partials()
+            .repartition(n_part, "term")
+            .sortWithinPartitions("term")
             .mapInPandas(merge_runs, schema=_LIST_SCHEMA)
-        )
-
-    if not cfg.checkpoint_segments:
-        mapside = getattr(cfg, "mapside_partials", True) and (
-            os.environ.get("BB25_MAPSIDE_PARTIALS", "1") != "0"
-        )
-        if mapside:
-            # map-side partial encode → ONE shuffle of compressed bytes
-            # → merge: the exchange payload is varbyte partials (~10.5
-            # B/posting: 8 B raw impact + ~1.5 B doc gap + ~1 B tf)
-            # instead of struct rows (~35-40 B/posting), and the old
-            # row-level (term, salt) exchange disappears entirely.  The
-            # salted split's skew job is done by the batch granularity:
-            # the Zipf head term arrives pre-chunked, one partial per
-            # 10k-row Arrow batch per read split.
-            ckpt.run_stage(
-                spark,
-                list_dir,
-                lambda: merge_of(build_partials(), order_cols=("term",)),
-                stage="posting_lists",
-                inputs=[postings_dir],
-                force=force,
-            )
-            # hand the checkpoint back on the caller's session so
-            # downstream lineage never references the split-cap clone
-            return spark.read.parquet(list_dir)
-        # salted streamed path: row shuffle → encode → shuffle by term
-        # → merge, one write
-        return ckpt.run_stage(
-            spark,
-            list_dir,
-            lambda: merge_of(build_segments()),
-            stage="posting_lists",
-            inputs=[postings_dir],
-            force=force,
         )
 
     ckpt.run_stage(
         spark,
-        seg_dir,
-        build_segments,
-        stage="segments",
-        inputs=[os.path.join(path, "postings")],
-        force=force,
-    )
-
-    # the segments table has MB-sized BINARY payload rows (a hot term's
-    # compressed list); the vectorized parquet reader's default 4096-row
-    # columnar batch then materializes GBs on heap and OOMs executors.
-    # Cap the batch size for the merge stage's scan — rows are huge, so
-    # small batches lose nothing.  The cap lives in a CLONED session
-    # (own SQLConf over the shared SparkContext): batch size is SQLConf-
-    # only (no per-scan parquet option), and setting it on the shared
-    # session would (a) race with the sibling term_stats/block_max jobs
-    # planned concurrently by the build thread pool and (b) leak the
-    # 64-row batch to every later scan when the key was unset before.
-    merge_spark = spark.newSession()
-    # newSession() starts from the context conf, not the runtime conf —
-    # carry over the build-scoped write tuning so the merge stage writes
-    # like every other checkpoint stage
-    for k in (
-        "spark.sql.files.maxPartitionBytes",
-        "spark.sql.files.openCostInBytes",
-        "spark.sql.parquet.compression.codec",
-        "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        "spark.sql.shuffle.partitions",
-    ):
-        v = spark.conf.get(k, None)
-        if v is not None:
-            merge_spark.conf.set(k, v)
-    merge_spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "64")
-    ckpt.run_stage(
-        merge_spark,
         list_dir,
-        lambda: merge_of(merge_spark.read.parquet(seg_dir)),
+        build_lists,
         stage="posting_lists",
-        inputs=[seg_dir],
+        inputs=[postings_dir],
         force=force,
     )
     # hand the checkpoint back on the caller's session so downstream
-    # lineage never references the clone
-    return spark.read.parquet(list_dir)
+    # lineage never references the split-cap clone
+    pl = spark.read.parquet(list_dir)
+    if "max_impact" not in pl.columns:
+        raise ValueError(
+            f"{list_dir} is a posting_lists checkpoint without the "
+            "term_stats columns (written by an older build); rebuild the "
+            "index with build_index(..., force=True)"
+        )
+    return pl
+
+
+# Below this many docs, params come from ONE Arrow collect of the
+# pseudo-query score sample; at and above it, from the distributed
+# median/std/percentile jobs (the sample grows with n_docs).
+_PARAMS_COLLECT_MAX = 500_000
 
 
 def _estimate_params(
@@ -1209,9 +981,8 @@ def _estimate_params(
         score_only=True,
     ).where(F.col("score") > 0)
 
-    collect_max = int(os.environ.get("BB25_PARAMS_COLLECT_MAX", "500000"))
     if (cfg.base_rate_method == "percentile" or cfg.base_rate != "auto") and (
-        n_docs < collect_max and os.environ.get("BB25_PARAMS_COLLECT", "1") != "0"
+        n_docs < _PARAMS_COLLECT_MAX
     ):
         # small-corpus fast path: ONE Arrow collect of the (query_id,
         # score) sample replaces the distributed chain's ~5 sequential

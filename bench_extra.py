@@ -63,7 +63,7 @@ def run_entry(spark, name, repeat=1, noop=False, explain_path=None):
         spark.sparkContext.setJobDescription(None)
     if explain_path:
         df = fn(spark, SF_DIR)
-        os.makedirs(os.path.dirname(explain_path), exist_ok=True)
+        os.makedirs(os.path.dirname(explain_path) or ".", exist_ok=True)
         with open(explain_path, "w") as f:
             f.write(df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"))

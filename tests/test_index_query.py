@@ -55,6 +55,20 @@ def six_oracle():
     return o, TransformParams(alpha=a, beta=b, base_rate=br)
 
 
+ZIPF3K_CFG = dict(alpha=1.0, beta=1.0, base_rate=0.05)
+
+
+@pytest.fixture(scope="module")
+def zipf3k_pages(spark):
+    return generate_pages(spark, 3000, seed=11, num_partitions=8)
+
+
+@pytest.fixture(scope="module")
+def zipf3k_index(spark, tmp_path_factory, zipf3k_pages):
+    path = str(tmp_path_factory.mktemp("idx_zipf3k"))
+    return build_index(spark, zipf3k_pages, path, IndexConfig(**ZIPF3K_CFG))
+
+
 class TestBuild:
     def test_build_scoped_conf_restored(self, spark, tmp_path):
         """build_index's session tuning (split cap, zstd codec, v2
@@ -72,80 +86,46 @@ class TestBuild:
         after = {k: spark.conf.get(k, None) for k in keys}
         assert after == before
 
-    def test_streamed_compressed_lists_equal_checkpointed(self, spark, tmp_path):
-        """The default streamed codec path (phase 1 → shuffle → merge,
-        one write) must produce byte-identical posting lists to the old
-        two-checkpoint layout (checkpoint_segments=True)."""
-        import os
+    def test_compressed_lists_equal_codec_reference_zipf(self, zipf3k_index):
+        """Every posting_lists row is byte-identical to encode_posting_list
+        over that term's postings rows sorted by doc_id on the driver —
+        on a Zipf corpus whose head terms span several Arrow batches, so
+        the merge stitches many map-side partials per term."""
+        from bayesian_bm25_spark.kernel.postings_codec import encode_posting_list
 
-        pages = pages_df_from_texts(spark, SIX_DOCS)
-        cfg = dict(alpha=1.0, beta=1.0)
-        a = build_index(
-            spark, pages, str(tmp_path / "pl_stream"),
-            IndexConfig(checkpoint_segments=False, **cfg),
-        )
-        b = build_index(
-            spark, pages, str(tmp_path / "pl_ckpt"),
-            IndexConfig(checkpoint_segments=True, **cfg),
-        )
-        rows_a = {(r["term"], r["df"], bytes(r["payload"]))
-                  for r in a.posting_lists.collect()}
-        rows_b = {(r["term"], r["df"], bytes(r["payload"]))
-                  for r in b.posting_lists.collect()}
-        assert rows_a == rows_b and len(rows_a) > 0
-        # streamed path writes no segments dir; checkpointed path does
-        assert not os.path.exists(str(tmp_path / "pl_stream" / "segments"))
-        assert os.path.exists(str(tmp_path / "pl_ckpt" / "segments"))
-
-    def test_mapside_partials_equal_salted_streamed_zipf(self, spark, tmp_path):
-        """The map-side partial encode (new default: per-batch numpy
-        sort + varbyte partials, ONE compressed-bytes shuffle) must be
-        byte-identical to the salted row-shuffle streamed path on a
-        Zipf corpus big enough for multi-split reads and multi-batch
-        head terms."""
-        from bayesian_bm25_spark.sources.webcorpus import generate_pages
-
-        pages = generate_pages(spark, 3000, seed=11, num_partitions=8)
-        cfg = dict(alpha=1.0, beta=1.0)
-        a = build_index(
-            spark, pages, str(tmp_path / "pl_map"),
-            IndexConfig(mapside_partials=True, **cfg),
-        )
-        b = build_index(
-            spark, pages, str(tmp_path / "pl_salt"),
-            IndexConfig(mapside_partials=False, **cfg),
-        )
-        rows_a = {(r["term"], r["df"], bytes(r["payload"]))
-                  for r in a.posting_lists.collect()}
-        rows_b = {(r["term"], r["df"], bytes(r["payload"]))
-                  for r in b.posting_lists.collect()}
-        assert rows_a == rows_b and len(rows_a) > 0
-
-    def test_fused_term_artifacts_equal_standalone_zipf(self, spark, tmp_path):
-        """The fused build (term_stats + block_max derived from the
-        posting-list merge's extra columns — one postings scan instead
-        of three) must produce value- AND schema-identical term_stats /
-        block_max checkpoints, and byte-identical posting lists, vs the
-        standalone per-stage scans, on a Zipf corpus with multi-batch
-        head terms."""
-        import os
-
-        from bayesian_bm25_spark.sources.webcorpus import generate_pages
-
-        pages = generate_pages(spark, 3000, seed=11, num_partitions=8)
-        cfg = dict(alpha=1.0, beta=1.0, base_rate=0.05)
-        a = build_index(
-            spark, pages, str(tmp_path / "fused"),
-            IndexConfig(fused_term_artifacts=True, **cfg),
-        )
-        os.environ["BB25_FUSED_ARTIFACTS"] = "0"
-        try:
-            b = build_index(
-                spark, pages, str(tmp_path / "standalone"),
-                IndexConfig(**cfg),
+        idx = zipf3k_index
+        flat = idx.postings.select("term", "doc_id", "tf", "impact").toPandas()
+        expect = {
+            term: (
+                len(g),
+                encode_posting_list(
+                    g["doc_id"].to_numpy(), g["tf"].to_numpy(), g["impact"].to_numpy()
+                ),
             )
-        finally:
-            os.environ.pop("BB25_FUSED_ARTIFACTS", None)
+            for term, g in flat.sort_values(["term", "doc_id"]).groupby("term")
+        }
+        got = {
+            r["term"]: (r["df"], bytes(r["payload"]))
+            for r in idx.posting_lists.select("term", "df", "payload").collect()
+        }
+        assert got == expect
+        # many 10k-row Arrow batches, and the head term is in most docs:
+        # its list is stitched from many partials
+        assert len(flat) > 10 * 10_000
+        assert max(df for df, _ in got.values()) > idx.n_docs // 2
+
+    def test_fused_term_artifacts_equal_standalone_zipf(
+        self, spark, tmp_path, zipf3k_pages, zipf3k_index
+    ):
+        """term_stats / block_max derived from the posting-list merge
+        (build_compressed=True) must be value- AND schema-identical to
+        the standalone postings scans of build_compressed=False."""
+        a = zipf3k_index
+        b = build_index(
+            spark, zipf3k_pages, str(tmp_path / "standalone"),
+            IndexConfig(build_compressed=False, **ZIPF3K_CFG),
+        )
+        assert b.posting_lists is None
         assert a.term_stats.schema == b.term_stats.schema
         assert sorted(map(tuple, a.term_stats.collect())) == sorted(
             map(tuple, b.term_stats.collect())
@@ -154,11 +134,50 @@ class TestBuild:
         assert sorted(map(tuple, a.block_max.collect())) == sorted(
             map(tuple, b.block_max.collect())
         )
-        pl_a = {(r["term"], r["df"], bytes(r["payload"]))
-                for r in a.posting_lists.collect()}
-        pl_b = {(r["term"], r["df"], bytes(r["payload"]))
-                for r in b.posting_lists.collect()}
-        assert pl_a == pl_b and len(pl_a) == 3000
+
+    def test_distributed_params_equal_collected_zipf(
+        self, spark, zipf3k_index, monkeypatch
+    ):
+        """Above _PARAMS_COLLECT_MAX docs, α/β/base-rate come from the
+        distributed median/std/percentile jobs; they must equal the
+        one-collect driver math."""
+        from bayesian_bm25_spark.operators import index_build as IB
+
+        idx = zipf3k_index
+        docs = spark.read.parquet(f"{idx.path}/docs")
+        cfg = IndexConfig(base_rate="auto")
+        collected = IB._estimate_params(spark, docs, idx.postings, cfg, idx.n_docs)
+        monkeypatch.setattr(IB, "_PARAMS_COLLECT_MAX", 0)
+        distributed = IB._estimate_params(spark, docs, idx.postings, cfg, idx.n_docs)
+        assert distributed.alpha == pytest.approx(collected.alpha, rel=1e-9)
+        assert distributed.beta == pytest.approx(collected.beta, rel=1e-9)
+        assert distributed.base_rate == pytest.approx(collected.base_rate, rel=1e-9)
+
+    def test_resume_without_fused_columns_raises(self, spark, tmp_path):
+        """A posting_lists checkpoint without the term_stats columns
+        (written before the merge produced them) must fail the resume
+        loudly, naming the path and the remedy."""
+        import re
+        import shutil
+
+        from bayesian_bm25_spark.plans import checkpoint as ckpt
+
+        path = str(tmp_path / "old_pl")
+        pages = pages_df_from_texts(spark, SIX_DOCS)
+        cfg = IndexConfig(alpha=1.0, beta=1.0)
+        idx = build_index(spark, pages, path, cfg)
+        list_dir = f"{path}/posting_lists"
+        cut_dir = str(tmp_path / "cut")
+        ckpt.write_stage(
+            idx.posting_lists.select("term", "df", "payload"), cut_dir,
+            stage="posting_lists",
+        )
+        shutil.rmtree(list_dir)
+        shutil.move(cut_dir, list_dir)
+        with pytest.raises(ValueError, match=re.escape(list_dir) + ".*force=True"):
+            build_index(spark, pages, path, cfg)
+        rebuilt = build_index(spark, pages, path, cfg, force=True)
+        assert "max_impact" in rebuilt.posting_lists.columns
 
     def test_corpus_stats(self, six_index):
         corpus = [tokenize(d) for d in SIX_DOCS]
@@ -220,6 +239,17 @@ class TestBuild:
         assert idx2.n_docs == 6
         assert idx2.params.alpha == six_index.params.alpha
         assert idx2.postings.count() == six_index.postings.count()
+
+
+    def test_config_from_dict_drops_removed_fields(self):
+        """load_index reads the config through from_dict, so params.json
+        of an index built when IndexConfig had more fields still opens."""
+        old = {
+            **IndexConfig(k1=2.0).to_dict(),
+            "n_salts": 8, "mapside_partials": True, "checkpoint_segments": False,
+            "fused_term_artifacts": True, "local_tf": True, "broadcast_vocab_max": 0,
+        }
+        assert IndexConfig.from_dict(old) == IndexConfig(k1=2.0)
 
 
 class TestQuerySixDocs:

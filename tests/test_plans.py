@@ -271,33 +271,3 @@ class TestPostingsWriteSizing:
             cur = _postings_write_tasks(gb << 30, 32)
             assert cur >= prev
             prev = cur
-
-
-class TestDfJoinBroadcast:
-    def test_small_vocab_df_join_is_broadcast(self, spark):
-        """broadcast_vocab_max>0 forces a broadcast of the measured
-        small df aggregate (no tf exchange); the DEFAULT keeps the
-        shuffle join because its term-hash partitioning doubles as the
-        term-clustered write layout (r6 measured negative)."""
-        from bayesian_bm25_spark.operators.index_build import (
-            IndexConfig,
-            compute_postings,
-        )
-        from bayesian_bm25_spark.sources.webcorpus import generate_pages
-        from bayesian_bm25_spark.operators.index_build import tokenize_pages
-
-        docs = tokenize_pages(generate_pages(spark, 200, seed=3))
-        out = compute_postings(
-            docs, 200, 100.0, IndexConfig(broadcast_vocab_max=100000)
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
-        # the forced path measured the vocab: the aggregate is cached
-        assert getattr(out, "_bb25_df_pt", None) is not None
-        out._bb25_df_pt.unpersist()
-        # the default keeps the shuffle join: its term-hash output
-        # partitioning IS the term-clustered layout the postings write
-        # depends on (measured 3x downstream-scan regression without
-        # it — BENCH/BASELINE.md r6 addendum) — no persisted aggregate
-        out2 = compute_postings(docs, 200, 100.0, IndexConfig())
-        assert getattr(out2, "_bb25_df_pt", None) is None
