@@ -24,7 +24,11 @@ from pyspark.sql import functions as F
 
 from bayesian_bm25_spark.functions import columns as C
 from bayesian_bm25_spark.operators import query as Q
-from bayesian_bm25_spark.operators.index_build import IndexConfig, compute_postings
+from bayesian_bm25_spark.operators.index_build import (
+    IndexConfig,
+    _local_tf,
+    compute_postings,
+)
 
 # Fixed transform parameters for the SQL-checkable probability path
 # (auto-estimation is seeded-RNG driver logic, checked in pytest instead).
@@ -97,8 +101,6 @@ def _docs_tokens(
 
 
 def _corpus_postings(spark: SparkSession, sf_dir: str, method: str = "lucene") -> tuple:
-    from bayesian_bm25_spark.operators.index_build import _local_tf
-
     docs = _docs_tokens(spark, sf_dir)
     row = docs.agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("a")).collect()[0]
     n_docs, avgdl = int(row["n"]), float(row["a"])
@@ -117,9 +119,7 @@ def _corpus_postings(spark: SparkSession, sf_dir: str, method: str = "lucene") -
     # serialize the Arrow token-count pass.
     tf_docs = _docs_tokens(spark, sf_dir, spread=True, min_bytes=4 << 20)
     tf = _local_tf(tf_docs).persist()
-    postings = compute_postings(
-        docs, n_docs, avgdl, IndexConfig(method=method), tf_source=tf
-    )
+    postings = compute_postings(tf, n_docs, avgdl, IndexConfig(method=method))
     return docs, postings, n_docs, avgdl
 
 
@@ -284,7 +284,7 @@ LIMIT 100
 
 def q_bm25_topk(spark, sf_dir):
     docs, postings, _, _ = _corpus_postings(spark, sf_dir)
-    scored = Q.score_queries(postings, _doc_queries(docs), prune_buckets=False)
+    scored = Q.score_queries(postings, _doc_queries(docs))
     return _ranked_topk(scored, "score").select(
         "query_id", "rank", "doc_id", F.round("score", 6).alias("score_r")
     )
@@ -304,7 +304,7 @@ SELECT query_id, rank, doc_id, score_r FROM ranked WHERE rank <= 10
 
 def q_bm25_topk_robertson(spark, sf_dir):
     docs, postings, _, _ = _corpus_postings(spark, sf_dir, method="robertson")
-    scored = Q.score_queries(postings, _doc_queries(docs), prune_buckets=False)
+    scored = Q.score_queries(postings, _doc_queries(docs))
     return _ranked_topk(scored, "score").select(
         "query_id", "rank", "doc_id", F.round("score", 6).alias("score_r")
     )
@@ -322,7 +322,7 @@ def q_probability_topk(spark, sf_dir):
     docs, postings, _, avgdl = _corpus_postings(spark, sf_dir)
     params = TransformParams(alpha=P_ALPHA, beta=P_BETA, base_rate=P_BR)
     scored = Q.with_probability(
-        Q.score_queries(postings, _doc_queries(docs), prune_buckets=False), params, avgdl
+        Q.score_queries(postings, _doc_queries(docs)), params, avgdl
     )
     return _ranked_topk(scored, "score").select(
         "query_id", "rank", "doc_id", F.round("probability", 6).alias("prob_r")
@@ -1575,9 +1575,11 @@ def q_multifield_topk(spark, sf_dir):
     parts = {}
     for name, fdocs in (("title", title), ("body", body)):
         row = fdocs.agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("a")).collect()[0]
-        postings = compute_postings(fdocs, int(row["n"]), float(row["a"]), IndexConfig())
+        postings = compute_postings(
+            _local_tf(fdocs), int(row["n"]), float(row["a"]), IndexConfig()
+        )
         parts[name] = Q.with_probability(
-            Q.score_queries(postings, queries, prune_buckets=False), params, float(row["a"])
+            Q.score_queries(postings, queries), params, float(row["a"])
         ).select("query_id", "doc_id", F.col("probability").alias(f"p_{name}"))
     cands = (
         parts["title"]
@@ -1683,7 +1685,7 @@ def _two_signal_frames(spark, sf_dir):
     """Sparse = BM25 scored set; dense pseudo-cosine from doc_id (both
     engines compute identical values)."""
     docs, postings, _, _ = _corpus_postings(spark, sf_dir)
-    sparse = Q.score_queries(postings, _doc_queries(docs), prune_buckets=False).select(
+    sparse = Q.score_queries(postings, _doc_queries(docs)).select(
         "query_id", "doc_id", "score"
     )
     dense = (
@@ -1890,9 +1892,9 @@ def q_logodds_posterior_hybrid(spark, sf_dir):
     from bayesian_bm25_spark.operators import fusion_ops as FO
 
     docs, postings, _, avgdl = _corpus_postings(spark, sf_dir)
-    sparse = Q.score_queries(
-        postings, _doc_queries(docs), prune_buckets=False
-    ).select("query_id", "doc_id", "score", "tf_match", "doc_len")
+    sparse = Q.score_queries(postings, _doc_queries(docs)).select(
+        "query_id", "doc_id", "score", "tf_match", "doc_len"
+    )
     dense = (
         _doc_queries(docs)
         .select("query_id")
@@ -2911,7 +2913,7 @@ def q_hybrid_balanced_topk(spark, sf_dir):
     docs, postings, _, avgdl = _corpus_postings(spark, sf_dir)
     params = TransformParams(alpha=P_ALPHA, beta=P_BETA, base_rate=P_BR)
     sparse = Q.with_probability(
-        Q.score_queries(postings, _doc_queries(docs), prune_buckets=False), params, avgdl
+        Q.score_queries(postings, _doc_queries(docs)), params, avgdl
     ).select("query_id", "doc_id", "probability")
 
     emb = _read(spark, sf_dir, "embeddings")

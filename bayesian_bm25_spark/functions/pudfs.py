@@ -43,36 +43,6 @@ def attention_fusion_udf(W: np.ndarray, b: np.ndarray, alpha: float,
     return fuse
 
 
-def platt_udf(a: float, b: float):
-    """Platt calibration as a UDF (prefer the Column version in
-    functions.columns; this exists for UDF-path parity tests)."""
-    from bayesian_bm25_spark.kernel.transform import sigmoid
-
-    @pandas_udf("double")
-    def platt(s: pd.Series) -> pd.Series:
-        return pd.Series(np.asarray(sigmoid(a * s.to_numpy() + b)))
-
-    return platt
-
-
-def score_to_probability_udf(alpha: float, beta: float, base_rate, mode: str = "balanced"):
-    """Kernel-exact transform as a UDF — bit-identical to the numpy
-    oracle (the Column version differs only by IEEE noise; this one is
-    for exactness-critical paths and parity tests)."""
-    from bayesian_bm25_spark.kernel.transform import TransformParams
-
-    params = TransformParams(alpha=alpha, beta=beta, base_rate=base_rate, mode=mode)
-
-    @pandas_udf("double")
-    def transform(score: pd.Series, tf: pd.Series, ratio: pd.Series) -> pd.Series:
-        out = params.score_to_probability(
-            score.to_numpy(), tf.to_numpy(), ratio.to_numpy()
-        )
-        return pd.Series(np.atleast_1d(out))
-
-    return transform
-
-
 def cell_assign_udf(centroids: np.ndarray):
     """argmax-cosine cell assignment against broadcast centroids.
 

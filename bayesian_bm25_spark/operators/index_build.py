@@ -279,33 +279,36 @@ def _local_tf(docs: DataFrame) -> DataFrame:
     )
 
 
-def compute_postings(
-    docs: DataFrame, n_docs: int, avgdl: float, cfg: IndexConfig | None = None,
-    tf_source: DataFrame | None = None,
-) -> DataFrame:
-    """Lazy postings plan from docs(doc_id, tokens, doc_len).
+def _append_tf(old_postings: DataFrame, new_docs: DataFrame) -> DataFrame:
+    """tf facts of `old corpus ∪ new docs` for an append.
 
-    Row-local tf via ``_local_tf`` (no token-stream shuffle) → per-term
-    df agg (small) → join (AQE broadcasts small vocab; one shuffle of
-    the tf rows otherwise) → eager impact column (pure codegen) →
-    term-bucket layout column for partition pruning.
+    (doc_id, doc_len, term, tf) never change once a doc is indexed, so
+    the old postings checkpoint IS the old corpus's tf: a columnar scan
+    of 4 fixed-width columns replaces a re-count of every old token
+    array, and the token pass scales with the appended docs only."""
+    return old_postings.select("doc_id", "doc_len", "term", "tf").unionByName(
+        _local_tf(new_docs)
+    )
+
+
+def compute_postings(
+    tf: DataFrame, n_docs: int, avgdl: float, cfg: IndexConfig | None = None
+) -> DataFrame:
+    """Lazy postings plan from tf facts (doc_id, doc_len, term, tf) —
+    ``_local_tf(docs)`` for a fresh corpus, ``_append_tf`` for an append.
+
+    Per-term df agg (small) → join (AQE broadcasts small vocab; one
+    shuffle of the tf rows otherwise) → eager impact column (pure
+    codegen) → term-bucket layout column for partition pruning.  The
+    plan reads ``tf`` twice (df agg + join probe), so the build persists
+    ``tf`` before executing it.
 
     The df join is not forced to a broadcast: its term-hash output
     partitioning keeps the written files term-clustered, and a forced
     broadcast made every downstream postings scan ~3× slower
-    (BENCH/BASELINE.md r6 addendum §6).
-
-    ``tf_source`` (doc_id, doc_len, term, tf) overrides the tf
-    computation entirely — the incremental-append path passes the old
-    index's tf facts unioned with the new docs' tf, so the old corpus's
-    token arrays are never re-read (``add_documents(reuse_tf=True)``);
-    df/impact are recomputed from the merged tf either way (they change
-    globally with every append: n_docs, avgdl, df)."""
+    (BENCH/BASELINE.md r6 addendum §6)."""
     cfg = cfg or IndexConfig()
-    if tf_source is not None:
-        tf = tf_source.select("doc_id", "doc_len", "term", "tf")
-    else:
-        tf = _local_tf(docs)
+    tf = tf.select("doc_id", "doc_len", "term", "tf")
     df_per_term = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     return (
         tf.join(df_per_term, "term")
@@ -416,48 +419,29 @@ def _postings_write_tasks(docs_bytes: int, default_parallelism: int) -> int:
     return max(min(8, default_parallelism), by_bytes)
 
 
-def build_index(
+def _build_postings_stages(
     spark: SparkSession,
-    pages: DataFrame,
     path: str,
-    config: IndexConfig | None = None,
+    cfg: IndexConfig,
+    docs_fn,
     force: bool = False,
     tf_source: DataFrame | None = None,
-) -> BM25Index:
-    """Build (or resume building) the index at ``path``.
+    docs_inputs: list[str] | None = None,
+) -> tuple[DataFrame, int, float, DataFrame, dict[str, float]]:
+    """Serial prefix of every index build, run under ``_read_split_cap``:
+    docs stage (``docs_fn()`` → doc_id, tokens, doc_len) →
+    ``corpus_stats.json`` → postings stage.
 
-    ``tf_source``: precomputed (doc_id, doc_len, term, tf) facts that
-    replace the tokenize-and-count pass — the incremental-append path
-    (see ``add_documents(reuse_tf=True)``).
-
-    Raises ``ValueError`` when resuming a posting_lists checkpoint that
-    lacks the term_stats columns; rebuild with ``force=True``."""
-    with _read_split_cap(spark):
-        return _build_index_impl(spark, pages, path, config, force, tf_source)
-
-
-def _build_index_impl(
-    spark: SparkSession,
-    pages: DataFrame,
-    path: str,
-    config: IndexConfig | None = None,
-    force: bool = False,
-    tf_source: DataFrame | None = None,
-) -> BM25Index:
-    cfg = config or IndexConfig()
+    ``tf_source`` (doc_id, doc_len, term, tf) replaces ``_local_tf`` of
+    the docs — the append path passes ``_append_tf``.  Returns (docs,
+    n_docs, avgdl, postings, serial phase seconds)."""
     os.makedirs(path, exist_ok=True)
-    t_start = time.time()
-
     serial_phase: dict[str, float] = {}
     t_phase = time.time()
 
     docs_dir = os.path.join(path, "docs")
     docs = ckpt.run_stage(
-        spark,
-        docs_dir,
-        lambda: tokenize_pages(pages, stemmer=cfg.stemmer, stopwords=cfg.stopwords),
-        stage="docs",
-        force=force,
+        spark, docs_dir, docs_fn, stage="docs", inputs=docs_inputs, force=force
     )
     serial_phase["docs"] = round(time.time() - t_phase, 2)
     t_phase = time.time()
@@ -490,11 +474,9 @@ def _build_index_impl(
 
     def build_postings() -> DataFrame:
         nonlocal tf_cached
-        # covers the append path too: its union's _local_tf(new docs)
-        # leg would otherwise also execute twice
         src = tf_source if tf_source is not None else _local_tf(docs)
         tf_cached = src.persist()
-        out = compute_postings(docs, n_docs, avgdl, cfg, tf_source=tf_cached)
+        out = compute_postings(tf_cached, n_docs, avgdl, cfg)
         # The cached probe pins the write's task count to the cache
         # partition count (32 tasks × 32 bucket dirs = 1024 tiny files
         # at 50k docs — measured to double every downstream postings
@@ -524,7 +506,42 @@ def _build_index_impl(
     if tf_cached is not None:
         tf_cached.unpersist()
     serial_phase["postings"] = round(time.time() - t_phase, 2)
+    return docs, n_docs, avgdl, postings, serial_phase
 
+
+def build_index(
+    spark: SparkSession,
+    pages: DataFrame,
+    path: str,
+    config: IndexConfig | None = None,
+    force: bool = False,
+) -> BM25Index:
+    """Build (or resume building) the index at ``path``.
+
+    Raises ``ValueError`` when resuming a posting_lists checkpoint that
+    lacks the term_stats columns; rebuild with ``force=True``."""
+    cfg = config or IndexConfig()
+    with _read_split_cap(spark):
+        return _build_index_impl(
+            spark, path, cfg, force,
+            lambda: tokenize_pages(pages, stemmer=cfg.stemmer, stopwords=cfg.stopwords),
+        )
+
+
+def _build_index_impl(
+    spark: SparkSession,
+    path: str,
+    cfg: IndexConfig,
+    force: bool,
+    docs_fn,
+    tf_source: DataFrame | None = None,
+    docs_inputs: list[str] | None = None,
+) -> BM25Index:
+    t_start = time.time()
+    docs, n_docs, avgdl, postings, serial_phase = _build_postings_stages(
+        spark, path, cfg, docs_fn, force, tf_source, docs_inputs
+    )
+    postings_dir = os.path.join(path, "postings")
     term_stats_dir = os.path.join(path, "term_stats")
 
     def build_term_stats() -> DataFrame:
@@ -930,6 +947,22 @@ def _build_compressed_lists(
 _PARAMS_COLLECT_MAX = 500_000
 
 
+def _params_from_scores(
+    per_query_scores: list, cfg: IndexConfig, n_docs: int
+) -> TransformParams:
+    """Driver math of the reference protocol (scorer.py:313-337) over
+    the per-query nonzero score arrays.  An empty sample goes through
+    the same kernel estimators, so user-set α/β/base-rate survive it."""
+    alpha, beta = estimate_alpha_beta(per_query_scores, cfg.alpha, cfg.beta)
+    if cfg.base_rate == "auto":
+        base_rate = estimate_base_rate(per_query_scores, n_docs, cfg.base_rate_method)
+    elif isinstance(cfg.base_rate, (int, float)):
+        base_rate = float(cfg.base_rate)
+    else:
+        base_rate = None
+    return TransformParams(alpha=alpha, beta=beta, base_rate=base_rate)
+
+
 def _estimate_params(
     spark: SparkSession, docs: DataFrame, postings: DataFrame, cfg: IndexConfig, n_docs: int
 ) -> TransformParams:
@@ -962,7 +995,7 @@ def _estimate_params(
         if tokens_by_id.get(did)
     ]
     if not queries:
-        return TransformParams(alpha=cfg.alpha or 1.0, beta=cfg.beta or 0.0)
+        return _params_from_scores([], cfg, n_docs)
     qdf = spark.createDataFrame(queries, schema="query_id long, terms array<string>")
     # co_partition=False is deliberate: the default query plan repartitions
     # the WHOLE postings table by doc_id before the broadcast join — right
@@ -981,146 +1014,111 @@ def _estimate_params(
         score_only=True,
     ).where(F.col("score") > 0)
 
-    if (cfg.base_rate_method == "percentile" or cfg.base_rate != "auto") and (
-        n_docs < _PARAMS_COLLECT_MAX
+    if n_docs < _PARAMS_COLLECT_MAX or (
+        cfg.base_rate == "auto" and cfg.base_rate_method != "percentile"
     ):
-        # small-corpus fast path: ONE Arrow collect of the (query_id,
-        # score) sample replaces the distributed chain's ~5 sequential
-        # jobs (cache materialize + stddev agg + 3-job exact percentile
-        # + window base-rate).  Inside the build's parallel group each
-        # of those jobs queued behind the bulk stages' tasks, so the
-        # params phase paid ~2-3× its standalone wall in scheduling
-        # latency alone.  The driver math IS the reference protocol
-        # (scorer.py:313-337) — the same kernel estimators the
-        # mixture/elbow branch already collects for — and the sample is
-        # bounded by the 50 pseudo-queries' nonzero scores.  Above the
-        # cutoff the fully distributed path below is unchanged.
+        # ONE Arrow collect of the (query_id, score) sample, then the
+        # kernel estimators on the driver.  Small corpora: replaces the
+        # distributed chain's ~5 sequential jobs (cache materialize +
+        # stddev agg + 3-job exact percentile + window base-rate), each
+        # of which queued behind the bulk stages' tasks inside the
+        # build's parallel group (~2-3× the standalone params wall in
+        # scheduling latency alone).  mixture/elbow: those estimators
+        # are whole-sample iterative at any size.  The sample is bounded
+        # by the 50 pseudo-queries' nonzero scores.
         pdf = scored.select("query_id", "score").toPandas()
-        if len(pdf) == 0:
-            return TransformParams(alpha=cfg.alpha or 1.0, beta=cfg.beta or 0.0)
         per_query_scores = [
             g.to_numpy(dtype=np.float64)
             for _, g in pdf.groupby("query_id", sort=True)["score"]
         ]
-        alpha, beta = estimate_alpha_beta(per_query_scores, cfg.alpha, cfg.beta)
-        if cfg.base_rate == "auto":
-            base_rate = estimate_base_rate(per_query_scores, n_docs, "percentile")
-        elif isinstance(cfg.base_rate, (int, float)):
-            base_rate = float(cfg.base_rate)
-        else:
-            base_rate = None
-        return TransformParams(alpha=alpha, beta=beta, base_rate=base_rate)
+        return _params_from_scores(per_query_scores, cfg, n_docs)
 
-    if cfg.base_rate_method == "percentile" or cfg.base_rate != "auto":
-        # fully distributed path: β = exact median, α = 1/std_pop of the
-        # pooled nonzero sample; base-rate = mean over queries of
-        # frac(scores ≥ per-query exact 95th pct)/n_docs.  Spark's exact
-        # ``percentile`` uses the same linear interpolation as numpy, so
-        # the values equal the reference's driver math — without ever
-        # collecting the O(n_docs)-sized score sample.
-        from bayesian_bm25_spark.operators.stats import exact_percentile
+    # fully distributed path: β = exact median, α = 1/std_pop of the
+    # pooled nonzero sample; base-rate = mean over queries of
+    # frac(scores ≥ per-query exact 95th pct)/n_docs.  Spark's exact
+    # ``percentile`` uses the same linear interpolation as numpy, so
+    # the values equal the reference's driver math — without ever
+    # collecting the O(n_docs)-sized score sample.
+    from bayesian_bm25_spark.operators.stats import exact_percentile
 
-        scored = scored.cache()
-        try:
-            # job 1 materializes the cache; the exact-median chain and
-            # the base-rate chain then read ONLY cached blocks and are
-            # independent — run them concurrently so their per-job fixed
-            # costs overlap (params is the longest member of the build's
-            # parallel group; every serial job here is on the critical
-            # path)
-            row = scored.agg(
-                F.stddev_pop("score").alias("std"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-            if int(row["n"]) == 0:
-                return TransformParams(alpha=cfg.alpha or 1.0, beta=cfg.beta or 0.0)
-            from concurrent.futures import ThreadPoolExecutor as _TPE
+    scored = scored.cache()
+    try:
+        # job 1 materializes the cache; the exact-median chain and
+        # the base-rate chain then read ONLY cached blocks and are
+        # independent — run them concurrently so their per-job fixed
+        # costs overlap (params is the longest member of the build's
+        # parallel group; every serial job here is on the critical
+        # path)
+        row = scored.agg(
+            F.stddev_pop("score").alias("std"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()[0]
+        if int(row["n"]) == 0:
+            return _params_from_scores([], cfg, n_docs)
+        from concurrent.futures import ThreadPoolExecutor as _TPE
 
-            def _base_rate() -> float | None:
-                if cfg.base_rate == "auto":
-                    # per-query p95 as a WINDOW aggregate: one shuffle
-                    # by query_id, then the filter, per-query ratio and
-                    # global mean all run map-side on that partitioning
-                    # (the old groupBy + self-join shuffled the scored
-                    # frame by query_id twice)
-                    wq = Window.partitionBy("query_id")
-                    ratios = (
-                        scored.withColumn(
-                            "thr", F.expr("percentile(score, 0.95)").over(wq)
-                        )
-                        .where(F.col("score") >= F.col("thr"))
-                        .groupBy("query_id")
-                        .agg((F.count(F.lit(1)) / F.lit(float(n_docs))).alias("ratio"))
+        def _base_rate() -> float | None:
+            if cfg.base_rate == "auto":
+                # per-query p95 as a WINDOW aggregate: one shuffle
+                # by query_id, then the filter, per-query ratio and
+                # global mean all run map-side on that partitioning
+                # (the old groupBy + self-join shuffled the scored
+                # frame by query_id twice)
+                wq = Window.partitionBy("query_id")
+                ratios = (
+                    scored.withColumn(
+                        "thr", F.expr("percentile(score, 0.95)").over(wq)
                     )
-                    return float(
-                        np.clip(float(ratios.agg(F.avg("ratio")).collect()[0][0]), 1e-6, 0.5)
-                    )
-                if isinstance(cfg.base_rate, (int, float)):
-                    return float(cfg.base_rate)
-                return None
-
-            with _TPE(max_workers=2) as pool:
-                f_med = pool.submit(
-                    exact_percentile, scored, "score", 0.5, n=int(row["n"])
+                    .where(F.col("score") >= F.col("thr"))
+                    .groupBy("query_id")
+                    .agg((F.count(F.lit(1)) / F.lit(float(n_docs))).alias("ratio"))
                 )
-                f_br = pool.submit(_base_rate)
-                est_beta = f_med.result()
-                base_rate = f_br.result()
-            std = float(row["std"])
-            est_alpha = 1.0 / std if std > 0 else 1.0
-            alpha = cfg.alpha if cfg.alpha is not None else est_alpha
-            beta = cfg.beta if cfg.beta is not None else est_beta
-            return TransformParams(alpha=alpha, beta=beta, base_rate=base_rate)
-        finally:
-            scored.unpersist()
+                return float(
+                    np.clip(float(ratios.agg(F.avg("ratio")).collect()[0][0]), 1e-6, 0.5)
+                )
+            if isinstance(cfg.base_rate, (int, float)):
+                return float(cfg.base_rate)
+            return None
 
-    # mixture/elbow estimators are inherently whole-sample iterative —
-    # Arrow-collect the per-query nonzero scores (reference protocol;
-    # fine for the sampled 50 queries, heavy only at extreme corpus
-    # sizes where "percentile" is the method to use)
-    pdf = scored.select("query_id", "score").toPandas()
-    per_query_scores = [
-        g.to_numpy(dtype=np.float64)
-        for _, g in pdf.groupby("query_id", sort=True)["score"]
-    ]
-    alpha, beta = estimate_alpha_beta(per_query_scores, cfg.alpha, cfg.beta)
-    base_rate = None
-    if cfg.base_rate == "auto":
-        base_rate = estimate_base_rate(per_query_scores, n_docs, cfg.base_rate_method)
-    elif isinstance(cfg.base_rate, (int, float)):
-        base_rate = float(cfg.base_rate)
-    return TransformParams(alpha=alpha, beta=beta, base_rate=base_rate)
+        with _TPE(max_workers=2) as pool:
+            f_med = pool.submit(
+                exact_percentile, scored, "score", 0.5, n=int(row["n"])
+            )
+            f_br = pool.submit(_base_rate)
+            est_beta = f_med.result()
+            base_rate = f_br.result()
+        std = float(row["std"])
+        est_alpha = 1.0 / std if std > 0 else 1.0
+        alpha = cfg.alpha if cfg.alpha is not None else est_alpha
+        beta = cfg.beta if cfg.beta is not None else est_beta
+        return TransformParams(alpha=alpha, beta=beta, base_rate=base_rate)
+    finally:
+        scored.unpersist()
 
 
 def add_documents(
-    index: BM25Index, new_pages: DataFrame, new_path: str,
-    reuse_tf: bool = False,
+    index: BM25Index, new_pages: DataFrame, new_path: str
 ) -> BM25Index:
     """Incremental append with full statistics rebuild.
 
     IDF/avgdl change with every append, so — like the reference
     (scorer.py:469-492 'rebuilds the full index') — the combined corpus
-    is re-indexed and α/β/base-rate re-estimated.  In Spark the rebuild
-    is the same checkpointed DAG over `old docs ∪ new docs`; the old
-    tokenization is reused (never recomputed), and df/avgdl/impact are
-    plain re-aggregations.  New doc_ids continue after the old range.
-
-    ``reuse_tf=True``: tf rows are append-only FACTS — (doc_id, term,
-    tf, doc_len) never change once a doc is indexed — so the old
-    index's postings checkpoint (which carries exactly those columns)
-    seeds the merged tf and only the NEW docs' token arrays are ever
-    counted.  df/avgdl/impact still recompute over the merged tf (they
-    change globally: pure column math + one small agg), but the
-    token-stream pass scales with the DELTA, not the corpus — at
-    10^12 docs the difference between an append job and a full
-    re-tokenize.  Postings are content-identical to a full rebuild
-    (pytest-enforced, including compressed posting-list payload bytes).
+    is re-indexed at ``new_path`` and α/β/base-rate re-estimated.  In
+    Spark the rebuild is ``build_index``'s checkpointed DAG over `old
+    docs ∪ new docs`: the old tokenization is reused (never recomputed),
+    the old postings seed the merged tf (``_append_tf``: only the new
+    docs' tokens are counted), and df/avgdl/impact are plain
+    re-aggregations over it.  Every stage at ``new_path`` is rewritten.
+    New doc_ids continue after the old range.  Postings and compressed
+    list bytes equal a fresh ``build_index`` of the combined corpus
+    (pytest-enforced).
     """
     spark = index.spark
+    cfg = index.config
     if "doc_id" in new_pages.columns:
         # preserve caller-supplied ids (reference append-order semantics);
         # validate they don't collide with the existing range
-        new_docs = tokenize_pages(new_pages, stemmer=index.config.stemmer, stopwords=index.config.stopwords)
+        new_docs = tokenize_pages(new_pages, stemmer=cfg.stemmer, stopwords=cfg.stopwords)
         mn = new_docs.agg(F.min("doc_id")).collect()[0][0]
         if mn is not None and int(mn) < index.n_docs:
             raise ValueError(
@@ -1132,33 +1130,17 @@ def add_documents(
         # appended batch, distributed — see assign_doc_ids)
         new_docs = tokenize_pages(
             assign_doc_ids(new_pages, start_id=index.n_docs),
-            stemmer=index.config.stemmer,
-            stopwords=index.config.stopwords,
+            stemmer=cfg.stemmer,
+            stopwords=cfg.stopwords,
         )
-    combined = index.spark.read.parquet(os.path.join(index.path, "docs")).unionByName(new_docs)
-    os.makedirs(new_path, exist_ok=True)
-    ckpt.write_stage(
-        combined,
-        os.path.join(new_path, "docs"),
-        stage="docs",
-        inputs=[os.path.join(index.path, "docs")],
-    )
-    tf_source = None
-    if reuse_tf:
-        # the old postings checkpoint IS the tf fact store; re-reading
-        # it costs a columnar scan of 4 fixed-width columns, not a
-        # re-count of every token array.  New docs come off the docs
-        # checkpoint just written (doc_id >= old n_docs) so the tf pass
-        # reads the already-tokenized rows, not the raw pages.
-        appended = spark.read.parquet(os.path.join(new_path, "docs")).where(
-            F.col("doc_id") >= index.n_docs
+    old_docs_dir = os.path.join(index.path, "docs")
+    combined = spark.read.parquet(old_docs_dir).unionByName(new_docs)
+    with _read_split_cap(spark):
+        return _build_index_impl(
+            spark, new_path, cfg, True, lambda: combined,
+            tf_source=_append_tf(index.postings, new_docs),
+            docs_inputs=[old_docs_dir],
         )
-        tf_source = index.postings.select(
-            "doc_id", "doc_len", "term", "tf"
-        ).unionByName(_local_tf(appended).select("doc_id", "doc_len", "term", "tf"))
-    # remaining stages rebuild from the docs checkpoint (pages unused)
-    return build_index(spark, combined.limit(0), new_path, index.config,
-                       tf_source=tf_source)
 
 
 def load_index(spark: SparkSession, path: str) -> BM25Index:

@@ -32,9 +32,11 @@ from bayesian_bm25_spark.kernel.transform import TransformParams
 from bayesian_bm25_spark.operators import query as Q
 from bayesian_bm25_spark.operators.index_build import (
     IndexConfig,
-    compute_postings,
+    _append_tf,
+    _build_postings_stages,
+    _estimate_params,
+    _read_split_cap,
 )
-from bayesian_bm25_spark.plans import checkpoint as ckpt
 
 
 @dataclass
@@ -72,6 +74,15 @@ def validate_weights(fields: list[str], weights: dict[str, float] | None) -> dic
     return dict(weights)
 
 
+def _field_docs(docs: DataFrame, field: str) -> DataFrame:
+    """(doc_id, tokens, doc_len) of one text column."""
+    if field not in docs.columns:
+        raise ValueError(f"field {field!r} missing from docs columns {docs.columns}")
+    return docs.select(
+        "doc_id", C.tokenize(F.col(field)).alias("tokens")
+    ).withColumn("doc_len", F.size("tokens").cast("long"))
+
+
 def _index_field(
     spark: SparkSession,
     fdocs: DataFrame,
@@ -79,27 +90,50 @@ def _index_field(
     cfg: IndexConfig,
     field: str,
     force: bool = False,
+    tf_source: DataFrame | None = None,
 ) -> FieldIndex:
-    """Checkpoint one field's docs, build its postings, estimate params —
-    the unit shared by the initial build and incremental append."""
-    from bayesian_bm25_spark.operators.index_build import _estimate_params
-
-    fdocs_ck = ckpt.run_stage(
-        spark, os.path.join(fdir, "docs"), lambda fd=fdocs: fd,
-        stage=f"docs[{field}]", force=force,
-    )
-    row = fdocs_ck.agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("a")).collect()[0]
-    n_docs, avgdl = int(row["n"]), float(row["a"])
-    postings = ckpt.run_stage(
-        spark,
-        os.path.join(fdir, "postings"),
-        lambda fd=fdocs_ck, n=n_docs, a=avgdl: compute_postings(fd, n, a, cfg),
-        stage=f"postings[{field}]",
-        partition_by=["term_bucket"],
-        force=force,
-    )
-    params = _estimate_params(spark, fdocs_ck, postings, cfg, n_docs)
+    """One field's docs → corpus stats → postings through
+    ``build_index``'s stages, then its params — the unit shared by the
+    initial build and incremental append."""
+    with _read_split_cap(spark):
+        docs, n_docs, avgdl, postings, _ = _build_postings_stages(
+            spark, fdir, cfg, lambda: fdocs, force, tf_source
+        )
+        params = _estimate_params(spark, docs, postings, cfg, n_docs)
     return FieldIndex(field, postings, params, avgdl, n_docs)
+
+
+def _write_multi_field(
+    spark: SparkSession,
+    path: str,
+    fields: list[str],
+    weights: dict[str, float],
+    cfg: IndexConfig,
+    per_field: dict[str, FieldIndex],
+    alpha: float,
+) -> MultiFieldIndex:
+    """Write ``multi_field.json`` and return the index handle."""
+    meta = {
+        "fields": fields,
+        "weights": weights,
+        "alpha": alpha,
+        "config": cfg.to_dict(),
+        "per_field": {
+            f: {"params": fi.params.to_dict(), "avgdl": fi.avgdl, "n_docs": fi.n_docs}
+            for f, fi in per_field.items()
+        },
+    }
+    with open(os.path.join(path, "multi_field.json"), "w") as fp:
+        json.dump(meta, fp, indent=2)
+    return MultiFieldIndex(
+        spark=spark,
+        path=path,
+        fields=fields,
+        weights=weights,
+        config=cfg,
+        per_field=per_field,
+        alpha=alpha,
+    )
 
 
 def build_multi_field_index(
@@ -117,43 +151,27 @@ def build_multi_field_index(
     Each field is tokenized, indexed, and parameter-estimated
     independently (its own pseudo-query sample over that field's token
     stream), exactly as the reference builds one scorer per field.
+
+    Raises ``ValueError`` when ``config`` sets ``stemmer`` or
+    ``stopwords``: fields are tokenized without them on both the index
+    and the query side.
     """
-    from bayesian_bm25_spark.operators.index_build import _estimate_params
-
     cfg = config or IndexConfig()
-    w = validate_weights(fields, weights)
-    os.makedirs(path, exist_ok=True)
-    per_field: dict[str, FieldIndex] = {}
-    for field in fields:
-        if field not in docs.columns:
-            raise ValueError(f"field {field!r} missing from docs columns {docs.columns}")
-        fdocs = docs.select(
-            "doc_id", C.tokenize(F.col(field)).alias("tokens")
-        ).withColumn("doc_len", F.size("tokens").cast("long"))
-        per_field[field] = _index_field(
-            spark, fdocs, os.path.join(path, f"field={field}"), cfg, field, force
+    if cfg.stemmer is not None or cfg.stopwords is not None:
+        raise ValueError(
+            "multi-field indexes do not support stemmer/stopwords "
+            f"(got stemmer={cfg.stemmer!r}, stopwords={cfg.stopwords!r})"
         )
-
-    meta = {
-        "fields": fields,
-        "weights": w,
-        "alpha": resolve_alpha(alpha, default=0.5),
-        "config": cfg.to_dict(),
-        "per_field": {
-            f: {"params": fi.params.to_dict(), "avgdl": fi.avgdl, "n_docs": fi.n_docs}
-            for f, fi in per_field.items()
-        },
+    w = validate_weights(fields, weights)
+    per_field = {
+        field: _index_field(
+            spark, _field_docs(docs, field), os.path.join(path, f"field={field}"),
+            cfg, field, force,
+        )
+        for field in fields
     }
-    with open(os.path.join(path, "multi_field.json"), "w") as fp:
-        json.dump(meta, fp, indent=2)
-    return MultiFieldIndex(
-        spark=spark,
-        path=path,
-        fields=fields,
-        weights=w,
-        config=cfg,
-        per_field=per_field,
-        alpha=resolve_alpha(alpha, default=0.5),
+    return _write_multi_field(
+        spark, path, fields, w, cfg, per_field, resolve_alpha(alpha, default=0.5)
     )
 
 
@@ -204,9 +222,10 @@ def add_documents_multi_field(
     every field's index is rebuilt over `old docs ∪ new docs` with fresh
     statistics and per-field α/β/base-rate re-estimation — IDF and avgdl
     change with any append, exactly like the single-index
-    ``index_build.add_documents``.  The OLD per-field tokenization is
-    read back from its parquet checkpoint, never recomputed; only the new
-    docs are tokenized.
+    ``index_build.add_documents``, through the same append path: the OLD
+    per-field tokenization is read back from its parquet checkpoint and
+    the old postings seed the merged tf (``_append_tf``); only the new
+    docs are tokenized and counted.
 
     ``new_docs`` must carry ``doc_id`` (≥ the existing n_docs — append
     order is the caller's id order, mirroring the reference's list
@@ -221,41 +240,18 @@ def add_documents_multi_field(
         raise ValueError(
             f"appended doc_id {mn} overlaps the existing range [0, {n_docs})"
         )
-    os.makedirs(new_path, exist_ok=True)
     per_field: dict[str, FieldIndex] = {}
     for field in idx.fields:
-        if field not in new_docs.columns:
-            raise ValueError(f"field {field!r} missing from new_docs columns")
+        add_fdocs = _field_docs(new_docs, field)
         old_fdocs = spark.read.parquet(
             os.path.join(idx.path, f"field={field}", "docs")
         )
-        add_fdocs = new_docs.select(
-            "doc_id", C.tokenize(F.col(field)).alias("tokens")
-        ).withColumn("doc_len", F.size("tokens").cast("long"))
-        combined = old_fdocs.unionByName(add_fdocs)
         per_field[field] = _index_field(
-            spark, combined, os.path.join(new_path, f"field={field}"),
-            idx.config, field,
+            spark, old_fdocs.unionByName(add_fdocs),
+            os.path.join(new_path, f"field={field}"), idx.config, field,
+            force=True,
+            tf_source=_append_tf(idx.per_field[field].postings, add_fdocs),
         )
-
-    meta = {
-        "fields": idx.fields,
-        "weights": idx.weights,
-        "alpha": idx.alpha,
-        "config": idx.config.to_dict(),
-        "per_field": {
-            f: {"params": fi.params.to_dict(), "avgdl": fi.avgdl, "n_docs": fi.n_docs}
-            for f, fi in per_field.items()
-        },
-    }
-    with open(os.path.join(new_path, "multi_field.json"), "w") as fp:
-        json.dump(meta, fp, indent=2)
-    return MultiFieldIndex(
-        spark=spark,
-        path=new_path,
-        fields=idx.fields,
-        weights=idx.weights,
-        config=idx.config,
-        per_field=per_field,
-        alpha=idx.alpha,
+    return _write_multi_field(
+        spark, new_path, idx.fields, idx.weights, idx.config, per_field, idx.alpha
     )

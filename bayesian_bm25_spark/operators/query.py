@@ -118,9 +118,7 @@ def score_queries(
     queries: DataFrame,
     *,
     n_buckets: int | None = None,
-    prune_buckets: bool = True,
     co_partition: bool = True,
-    num_partitions: int | None = None,
     driver_terms: list[str] | None = None,
     score_only: bool = False,
 ) -> DataFrame:
@@ -148,7 +146,7 @@ def score_queries(
     """
     qt = query_terms(queries)
     src = postings
-    if prune_buckets and n_buckets and "term_bucket" in postings.columns:
+    if n_buckets and "term_bucket" in postings.columns:
         src = prune_query_terms_buckets(postings, qt, n_buckets, driver_terms)
     # project to the four columns scoring reads BEFORE the exchange /
     # join probe (guide §2.3): tf/df/term_bucket otherwise ride the
@@ -164,7 +162,7 @@ def score_queries(
     if set(score_cols) <= set(src.columns):
         src = src.select(*score_cols)
     if co_partition:
-        p = num_partitions or postings.sparkSession.sparkContext.defaultParallelism * 2
+        p = postings.sparkSession.sparkContext.defaultParallelism * 2
         src = src.repartition(p, "doc_id")
     joined = src.join(F.broadcast(qt), "term")
     if score_only:
@@ -267,6 +265,14 @@ def get_probabilities(
     )
 
 
+def _impacts_nonnegative(term_stats: DataFrame) -> bool:
+    """Sign check for the pruned paths: MaxScore/threshold bounds hold
+    only for non-negative impacts.  One tiny job over the
+    ``term_stats.min_impact`` column every build writes."""
+    mn = term_stats.agg(F.min("min_impact")).collect()[0][0]
+    return mn is None or float(mn) >= 0.0
+
+
 def retrieve_maxscore(
     postings: DataFrame,
     queries: DataFrame,
@@ -275,7 +281,6 @@ def retrieve_maxscore(
     avgdl: float,
     k: int = 10,
     n_buckets: int | None = None,
-    num_partitions: int | None = None,
     impacts_nonnegative: bool | None = None,
     driver_terms: list[str] | None = None,
     src_partitioned: bool = False,
@@ -321,13 +326,7 @@ def retrieve_maxscore(
     plan, which is exact for any sign.
     """
     if impacts_nonnegative is None:
-        if "min_impact" in term_stats.columns:
-            row = term_stats.agg(F.min("min_impact")).collect()[0]
-            impacts_nonnegative = row[0] is None or float(row[0]) >= 0.0
-        else:
-            # legacy index without the stat: assume the default (lucene)
-            # method; robertson users must pass the flag explicitly
-            impacts_nonnegative = True
+        impacts_nonnegative = _impacts_nonnegative(term_stats)
     if not impacts_nonnegative:
         return retrieve(
             postings, queries, params, avgdl,
@@ -342,7 +341,7 @@ def retrieve_maxscore(
     # candidate set per partition (no-spill build side) — smaller
     # partitions keep each task's hash map well under its execution-
     # memory share on small-heap executors
-    p = num_partitions or spark.sparkContext.defaultParallelism * 4
+    p = spark.sparkContext.defaultParallelism * 4
     qt = query_terms(queries)
     src = postings
     if n_buckets and "term_bucket" in postings.columns:
@@ -425,6 +424,10 @@ def retrieve_maxscore(
     )
 
 
+# retrieve_auto routes to MaxScore from this corpus size on
+_MAXSCORE_MIN_DOCS = 250_000
+
+
 def retrieve_auto(
     postings: DataFrame,
     queries: DataFrame,
@@ -434,10 +437,9 @@ def retrieve_auto(
     n_docs: int,
     k: int = 10,
     n_buckets: int | None = None,
-    maxscore_min_docs: int = 250_000,
     driver_terms: list[str] | None = None,
     src_partitioned: bool = False,
-    **maxscore_kw,
+    impacts_nonnegative: bool | None = None,
 ) -> DataFrame:
     """Cost-based routing between the exhaustive co-partitioned scan and
     MaxScore pruning — the engine's AQE-style physical choice.
@@ -449,15 +451,16 @@ def retrieve_auto(
     BENCH/BASELINE.md round-3 notes): at 50k docs the single-join
     exhaustive plan is 2-3× FASTER (the fixed passes dominate); at 1M
     docs MaxScore is ~1.3× faster warm and ~3× faster cold (the
-    exhaustive agg spills).  The default threshold sits between the two
-    measured endpoints; tune per corpus/row-width.  Both paths are
-    rank-identical (pytest-enforced), so routing never changes
-    results."""
-    if n_docs >= maxscore_min_docs:
+    exhaustive agg spills).  ``_MAXSCORE_MIN_DOCS`` sits between the
+    two measured endpoints.  Both paths are rank-identical
+    (pytest-enforced), so routing never changes results.
+    ``impacts_nonnegative`` is passed to ``retrieve_maxscore``."""
+    if n_docs >= _MAXSCORE_MIN_DOCS:
         return retrieve_maxscore(
             postings, queries, term_stats, params, avgdl,
             k=k, n_buckets=n_buckets, driver_terms=driver_terms,
-            src_partitioned=src_partitioned, **maxscore_kw,
+            src_partitioned=src_partitioned,
+            impacts_nonnegative=impacts_nonnegative,
         )
     return retrieve(
         postings, queries, params, avgdl,
@@ -525,11 +528,7 @@ def retrieve_threshold(
     query-level gate and score every live query exactly.
     """
     if impacts_nonnegative is None:
-        if "min_impact" in term_stats.columns:
-            row = term_stats.agg(F.min("min_impact")).collect()[0]
-            impacts_nonnegative = row[0] is None or float(row[0]) >= 0.0
-        else:
-            impacts_nonnegative = True
+        impacts_nonnegative = _impacts_nonnegative(term_stats)
     if not impacts_nonnegative:
         scored = with_probability(
             score_queries(postings, queries, n_buckets=n_buckets), params, avgdl

@@ -2,10 +2,10 @@
 
 Every index-build stage writes its output as parquet plus a
 ``_manifest.json`` recording the stage name, input manifests (lineage),
-row count, per-partition row counts, and arbitrary stage metrics.  A
-re-run that finds a complete manifest skips recomputation and reads the
-parquet back — the build is resumable from any stage boundary, which is
-the checkpoint/lineage contract of the north rule.  (The reference has a
+row count and per-partition row counts.  A re-run that finds a
+complete manifest skips recomputation and reads the parquet back — the
+build is resumable from any stage boundary, which is the
+checkpoint/lineage contract of the north rule.  (The reference has a
 single in-memory build; persistence there is a .npz cache, reference
 benchmarks/hybrid_beir.py:303-373.)
 """
@@ -17,7 +17,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 MANIFEST_NAME = "_manifest.json"
 
@@ -52,9 +51,7 @@ def write_stage(
     *,
     stage: str,
     inputs: list[str] | None = None,
-    metrics: dict | None = None,
     partition_by: list[str] | None = None,
-    collect_partition_metrics: bool = True,
     compression: str | None = None,
 ) -> DataFrame:
     """Write ``df`` as a checkpointed stage and return the re-read frame.
@@ -75,25 +72,20 @@ def write_stage(
     writer.parquet(stage_dir)
     out = spark.read.parquet(stage_dir)
 
-    part_counts: list[int] = []
-    n_rows: int | None = None
-    if collect_partition_metrics:
-        # per-file row counts straight from the parquet footers — no
-        # extra Spark scan (a file is the unit of read parallelism, so
-        # these are the per-partition metrics the manifest promises)
-        part_counts = _parquet_file_rows(stage_dir)
-        n_rows = int(sum(part_counts))
+    # per-file row counts straight from the parquet footers — no extra
+    # Spark scan (a file is the unit of read parallelism, so these are
+    # the per-partition metrics the manifest promises)
+    part_counts = _parquet_file_rows(stage_dir)
 
     manifest = {
         "stage": stage,
         "path": stage_dir,
         "written_at_unix": t0,
         "wall_sec": time.time() - t0,
-        "n_rows": n_rows,
+        "n_rows": int(sum(part_counts)),
         "n_read_partitions": len(part_counts),
         "partition_row_counts": part_counts,
         "inputs": inputs or [],
-        "metrics": metrics or {},
     }
     with open(manifest_path(stage_dir), "w") as f:
         json.dump(manifest, f, indent=2)
@@ -107,25 +99,18 @@ def run_stage(
     *,
     stage: str,
     inputs: list[str] | None = None,
-    metrics_fn=None,
     partition_by: list[str] | None = None,
     force: bool = False,
     compression: str | None = None,
 ) -> DataFrame:
-    """Execute ``build_fn()`` unless a complete checkpoint already exists.
-
-    ``metrics_fn(df)`` may compute stage metrics to embed in the manifest.
-    """
+    """Execute ``build_fn()`` unless a complete checkpoint already exists."""
     if not force and is_complete(stage_dir):
         return spark.read.parquet(stage_dir)
-    df = build_fn()
-    metrics = metrics_fn(df) if metrics_fn else None
     return write_stage(
-        df,
+        build_fn(),
         stage_dir,
         stage=stage,
         inputs=inputs,
-        metrics=metrics,
         partition_by=partition_by,
         compression=compression,
     )

@@ -103,7 +103,8 @@ def start_streaming_ingest(
 
     The index lives as versioned checkpoint directories
     ``{index_base}_v{n}``; batch n's rebuild reuses every earlier batch's
-    tokenization from the docs checkpoint (never re-tokenizes).  Returns
+    tokenization and tf from the docs and postings checkpoints (only the
+    batch's own docs are tokenized and counted).  Returns
     (StreamingQuery, state) where ``state['index']`` always points at
     the latest committed BM25Index — queries between batches read a
     consistent snapshot.

@@ -278,6 +278,56 @@ class TestMultiFieldAppend:
         assert ids[0][0] == 2 and probs[0][0] > 0.0
 
 
+    def test_append_equals_build(self, spark, tmp_path):
+        """add_documents_multi_field(2 docs + 1) == build over 3 docs:
+        same postings rows and params in every field."""
+        from bayesian_bm25_spark.operators import multi_field as MFO
+
+        rows = [
+            (0, "cats and dogs", "a long body about cats and dogs"),
+            (1, "quantum physics", "qubits entangle and cats observe"),
+            (2, "gardening tips", "basil and thyme care for cats"),
+        ]
+        schema = "doc_id long, title string, body string"
+        fields = ["title", "body"]
+        cfg = IndexConfig(base_rate="auto")
+        first = MFO.build_multi_field_index(
+            spark, spark.createDataFrame(rows[:2], schema), fields,
+            str(tmp_path / "mf1"), config=cfg,
+        )
+        appended = MFO.add_documents_multi_field(
+            first, spark.createDataFrame(rows[2:], schema), str(tmp_path / "mf2")
+        )
+        fresh = MFO.build_multi_field_index(
+            spark, spark.createDataFrame(rows, schema), fields,
+            str(tmp_path / "mf3"), config=cfg,
+        )
+        cols = ["term_bucket", "term", "doc_id", "tf", "doc_len", "df", "impact"]
+        for f in fields:
+            got, want = appended.per_field[f], fresh.per_field[f]
+            assert sorted(map(tuple, got.postings.select(cols).collect())) == sorted(
+                map(tuple, want.postings.select(cols).collect())
+            ), f
+            assert got.params.to_dict() == want.params.to_dict(), f
+            assert (got.n_docs, got.avgdl) == (want.n_docs, want.avgdl), f
+            assert got.n_docs == 3
+
+    @pytest.mark.parametrize(
+        "kw", [{"stemmer": "porter"}, {"stopwords": "english"}]
+    )
+    def test_rejects_stemmer_and_stopwords(self, spark, tmp_path, kw):
+        from bayesian_bm25_spark.operators import multi_field as MFO
+
+        docs = spark.createDataFrame(
+            [(0, "the runners", "running fast")], "doc_id long, title string, body string"
+        )
+        with pytest.raises(ValueError, match="stemmer/stopwords"):
+            MFO.build_multi_field_index(
+                spark, docs, ["title", "body"], str(tmp_path / "mf"),
+                config=IndexConfig(**kw),
+            )
+
+
 class TestRenderers:
     def test_format_summary_golden(self):
         from bayesian_bm25_spark.operators.explain_traces import format_summary

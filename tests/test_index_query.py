@@ -251,6 +251,26 @@ class TestBuild:
         }
         assert IndexConfig.from_dict(old) == IndexConfig(k1=2.0)
 
+    @pytest.mark.parametrize("distributed", [False, True])
+    def test_user_base_rate_survives_empty_sample(
+        self, spark, tmp_path, monkeypatch, distributed
+    ):
+        """Every robertson impact of 4 identical docs is ≤ 0, so no
+        pseudo-query score passes the score > 0 filter; the user-set
+        base rate must still reach params on both the collect and the
+        distributed path."""
+        from bayesian_bm25_spark.operators import index_build as IB
+
+        if distributed:
+            monkeypatch.setattr(IB, "_PARAMS_COLLECT_MAX", 0)
+        pages = pages_df_from_texts(spark, ["same words here"] * 4)
+        idx = build_index(
+            spark, pages, str(tmp_path / "rob"),
+            IndexConfig(method="robertson", base_rate=0.05),
+        )
+        assert idx.params.base_rate == 0.05
+        assert (idx.params.alpha, idx.params.beta) == (1.0, 0.0)
+
 
 class TestQuerySixDocs:
     def test_rank_identical_topk(self, six_index, six_oracle):
@@ -444,7 +464,7 @@ class TestMaxScore:
         p = {key(r): (r["doc_id"], r["score"], r["probability"]) for r in pruned}
         assert e == p
 
-    def test_retrieve_auto_routes_and_is_identical(self, six_index):
+    def test_retrieve_auto_routes_and_is_identical(self, six_index, monkeypatch):
         """retrieve_auto = cost-based routing; results identical on both
         routes (the routes themselves are rank-identical, so routing
         never changes answers)."""
@@ -456,10 +476,11 @@ class TestMaxScore:
         key = lambda r: (r["query_id"], r["rank"])
         want = {key(r): (r["doc_id"], r["score"]) for r in base}
         for threshold in (10**9, 0):  # exhaustive route, maxscore route
+            monkeypatch.setattr(Q, "_MAXSCORE_MIN_DOCS", threshold)
             got = Q.retrieve_auto(
                 six_index.postings, qdf, six_index.term_stats,
                 six_index.params, six_index.avgdl, n_docs=six_index.n_docs,
-                k=3, maxscore_min_docs=threshold,
+                k=3,
             ).collect()
             assert {key(r): (r["doc_id"], r["score"]) for r in got} == want
 

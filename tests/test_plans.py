@@ -43,7 +43,7 @@ class TestScoringPlan:
         qdf = queries_to_df(plan_idx.spark, [["w1", "w2"], ["w3"]])
         import re
 
-        plan = plan_of(Q.score_queries(plan_idx.postings, qdf, prune_buckets=False))
+        plan = plan_of(Q.score_queries(plan_idx.postings, qdf))
         # the big-side agg over (query_id, doc_id) reuses the explicit
         # doc_id repartition — no exchange keyed on the full agg key.
         # (the query-TERMS side has its own tiny exchange before the
@@ -64,9 +64,7 @@ class TestScoringPlan:
         src = Q.prepartition_for_scoring(plan_idx.postings, 8)
         try:
             qdf = queries_to_df(spark, [["w1", "w2"], ["w3"]])
-            scored = Q.score_queries(
-                src, qdf, prune_buckets=False, co_partition=False
-            )
+            scored = Q.score_queries(src, qdf, co_partition=False)
             plan = plan_of(scored)
             assert "InMemoryTableScan" in plan
             # the scoring agg must NOT re-shuffle: no exchange keyed on
@@ -79,9 +77,7 @@ class TestScoringPlan:
             ), plan
             base = {
                 (r["query_id"], r["doc_id"], round(r["score"], 9))
-                for r in Q.score_queries(
-                    plan_idx.postings, qdf, prune_buckets=False
-                ).collect()
+                for r in Q.score_queries(plan_idx.postings, qdf).collect()
             }
             got = {
                 (r["query_id"], r["doc_id"], round(r["score"], 9))
@@ -102,9 +98,7 @@ class TestScoringPlan:
         src = Q.prepartition_for_scoring(plan_idx.postings, 64)
         try:
             qdf = queries_to_df(spark, [["w1", "w2"], ["w3"]])
-            scored = Q.score_queries(
-                src, qdf, prune_buckets=False, co_partition=False
-            )
+            scored = Q.score_queries(src, qdf, co_partition=False)
             plan = plan_of(scored)
             assert "InMemoryTableScan" in plan
             assert not re.search(
@@ -115,7 +109,7 @@ class TestScoringPlan:
 
     def test_query_side_is_broadcast(self, plan_idx):
         qdf = queries_to_df(plan_idx.spark, [["w1"]])
-        plan = plan_of(Q.score_queries(plan_idx.postings, qdf, prune_buckets=False))
+        plan = plan_of(Q.score_queries(plan_idx.postings, qdf))
         assert "BroadcastExchange" in plan
         assert "SortMergeJoin" not in plan
 
@@ -172,7 +166,7 @@ class TestCodegenOnlyOperators:
     def test_probability_path_pure_column(self, plan_idx):
         qdf = queries_to_df(plan_idx.spark, [["w1"]])
         scored = Q.with_probability(
-            Q.score_queries(plan_idx.postings, qdf, prune_buckets=False),
+            Q.score_queries(plan_idx.postings, qdf),
             plan_idx.params,
             plan_idx.avgdl,
         )

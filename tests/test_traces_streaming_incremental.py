@@ -201,39 +201,42 @@ class TestIncremental:
         assert idx2.params.alpha == pytest.approx(a, rel=1e-9)
         assert idx2.params.base_rate == pytest.approx(br, rel=1e-9)
 
-    def test_add_documents_reuse_tf_identical_to_rebuild(self, spark, tmp_path):
-        """reuse_tf=True seeds the merged tf from the old postings
-        checkpoint (token arrays of the old corpus never re-read) —
-        postings AND compressed posting-list payload bytes must be
-        content-identical to the full re-count path.  Stopwords in the
-        config exercise the append-side tokenizer parity."""
-        first = SIX_DOCS[:4]
-        extra = SIX_DOCS[4:]
+    def test_add_documents_identical_to_rebuild(self, spark, tmp_path):
+        """An append seeds the merged tf from the old postings checkpoint
+        (the old corpus's token arrays are never re-counted) — postings,
+        compressed posting-list payload bytes, corpus stats and params
+        must equal a fresh build of all six pages with the same ids.
+        Stopwords in the config exercise the append-side tokenizer
+        parity."""
         cfg = IndexConfig(base_rate="auto", build_compressed=True,
                           stopwords="english")
-        pages1 = spark.createDataFrame(
-            [(i, f"https://example.org/doc/{i}", t, "en") for i, t in enumerate(first)],
-            "doc_id long, url string, text string, lang string",
+        rows = [(i, f"https://example.org/doc/{i}", t, "en")
+                for i, t in enumerate(SIX_DOCS)]
+        schema = "doc_id long, url string, text string, lang string"
+        idx1 = build_index(
+            spark, spark.createDataFrame(rows[:4], schema), str(tmp_path / "w1"), cfg
         )
-        idx1 = build_index(spark, pages1, str(tmp_path / "w1"), cfg)
+        # no doc_id column: the append assigns 4, 5 by url rank
         pages2 = spark.createDataFrame(
-            [(f"https://example.org/doc/{4 + i}", t, "en") for i, t in enumerate(extra)],
-            "url string, text string, lang string",
+            [r[1:] for r in rows[4:]], "url string, text string, lang string"
         )
-        full = add_documents(idx1, pages2, str(tmp_path / "w_full"))
-        fast = add_documents(idx1, pages2, str(tmp_path / "w_fast"), reuse_tf=True)
+        appended = add_documents(idx1, pages2, str(tmp_path / "w2"))
+        fresh = build_index(
+            spark, spark.createDataFrame(rows, schema), str(tmp_path / "full"), cfg
+        )
 
         cols = ["term_bucket", "term", "doc_id", "tf", "doc_len", "df", "impact"]
-        a = sorted(map(tuple, full.postings.select(cols).collect()))
-        b = sorted(map(tuple, fast.postings.select(cols).collect()))
+        a = sorted(map(tuple, fresh.postings.select(cols).collect()))
+        b = sorted(map(tuple, appended.postings.select(cols).collect()))
         assert a == b
         pa = {r["term"]: (r["df"], bytes(r["payload"]))
-              for r in full.posting_lists.collect()}
+              for r in fresh.posting_lists.collect()}
         pb = {r["term"]: (r["df"], bytes(r["payload"]))
-              for r in fast.posting_lists.collect()}
+              for r in appended.posting_lists.collect()}
         assert pa == pb
-        assert fast.n_docs == full.n_docs and fast.avgdl == full.avgdl
-        assert fast.params.to_dict() == full.params.to_dict()
+        assert appended.n_docs == fresh.n_docs == 6
+        assert appended.avgdl == fresh.avgdl
+        assert appended.params.to_dict() == fresh.params.to_dict()
 
 
 class TestPartialResume:
