@@ -24,6 +24,7 @@ import tempfile
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,11 +41,24 @@ from bayesian_bm25_spark.sources.webcorpus import queries_to_df
 
 def _pages_from_tokens(spark: SparkSession, corpus_tokens: list[list[str]],
                        start_id: int = 0) -> DataFrame:
-    rows = [
-        (start_id + i, f"mem://doc/{start_id + i}", " ".join(toks), "und")
-        for i, toks in enumerate(corpus_tokens)
-    ]
-    return spark.createDataFrame(rows, "doc_id long, url string, text string, lang string")
+    ids = range(start_id, start_id + len(corpus_tokens))
+    table = pa.table({
+        "doc_id": pa.array(ids, pa.int64()),
+        "url": pa.array([f"mem://doc/{i}" for i in ids], pa.string()),
+        "text": pa.array([" ".join(toks) for toks in corpus_tokens], pa.string()),
+        "lang": pa.array(["und"] * len(corpus_tokens), pa.string()),
+    })
+    return spark.createDataFrame(table, "doc_id long, url string, text string, lang string")
+
+
+def _fields_from_tokens(spark: SparkSession, docs: list[dict], fields: list[str],
+                        start_id: int = 0) -> DataFrame:
+    """(doc_id, one text column per field) from per-field token dicts."""
+    columns = {"doc_id": pa.array(range(start_id, start_id + len(docs)), pa.int64())}
+    for f in fields:
+        columns[f] = pa.array([" ".join(d[f]) for d in docs], pa.string())
+    schema = "doc_id long, " + ", ".join(f"{f} string" for f in fields)
+    return spark.createDataFrame(pa.table(columns), schema)
 
 
 @dataclass
@@ -164,10 +178,11 @@ class BayesianBM25Scorer:
             raise RuntimeError("Call index() first.")
 
     def _maybe_stem(self, qdf: DataFrame) -> DataFrame:
-        """Normalize query terms exactly as the index tokenizer did:
-        stopword removal on the UNSTEMMED token first, then stemming
-        (the bm25s.tokenize order) — index and query tokenization must
-        always agree."""
+        """Normalize a query DataFrame's terms exactly as the index
+        tokenizer did: stopword removal on the UNSTEMMED token first,
+        then stemming (the bm25s.tokenize order) — index and query
+        tokenization must always agree.  Token lists take ``_normalize``
+        instead."""
         cfg = self._index.config
         if cfg.stopwords is not None:
             from bayesian_bm25_spark.functions.stopwords import remove_stopwords
@@ -180,6 +195,24 @@ class BayesianBM25Scorer:
 
             return stem_terms(qdf, algorithm=cfg.stemmer)
         return qdf
+
+    def _normalize(self, query_tokens: list[list[str]]) -> list[list[str]]:
+        """``_maybe_stem`` on the driver, for token-list queries: the same
+        pure functions the Spark UDFs wrap, in the same order, so the
+        query-term relation and its bucket set are built locally with no
+        Spark job and no Python worker."""
+        cfg = self._index.config
+        queries = [list(q) for q in query_tokens]
+        if cfg.stopwords is not None:
+            from bayesian_bm25_spark.functions.stopwords import filter_tokens_driver
+
+            queries = [filter_tokens_driver(q, cfg.stopwords) for q in queries]
+        if cfg.stemmer is not None:
+            from bayesian_bm25_spark.functions.stemmer import resolve_stemmer
+
+            stem = resolve_stemmer(cfg.stemmer)
+            queries = [[stem(t) for t in q] for q in queries]
+        return queries
 
     # -- query ------------------------------------------------------------
 
@@ -199,8 +232,9 @@ class BayesianBM25Scorer:
         struct is computed DISTRIBUTED alongside the top-k (pure Column
         math, explain_traces.bm25_trace), never per-doc on the driver."""
         self._require()
-        qdf = self._maybe_stem(queries_to_df(self.spark, query_tokens))
-        driver_terms = self._driver_terms(query_tokens)
+        normalized = self._normalize(query_tokens)
+        qdf = Q.local_query_terms(self.spark, normalized)
+        driver_terms = sorted({t for q in normalized for t in q})
         if not explain:
             res = self._route(qdf, k, driver_terms=driver_terms)
             return _collect_topk(res, len(query_tokens), k, "probability")
@@ -238,25 +272,6 @@ class BayesianBM25Scorer:
         return RetrievalResult(
             doc_ids=doc_ids, probabilities=probs, explanations=explanations
         )
-
-    def _driver_terms(self, query_tokens: list[list[str]]) -> list[str]:
-        """Flat post-normalization term list for driver-side bucket
-        pruning — filters/stems with the SAME pure-Python functions the
-        Spark UDFs wrap, so the bucket set exactly matches the
-        distributed terms (no Spark job spent learning which partitions
-        to scan)."""
-        cfg = self._index.config
-        terms = {t for q in query_tokens for t in q}
-        if cfg.stopwords is not None:
-            from bayesian_bm25_spark.functions.stopwords import resolve_stopwords
-
-            terms -= resolve_stopwords(cfg.stopwords)
-        if cfg.stemmer is not None:
-            from bayesian_bm25_spark.functions.stemmer import resolve_stemmer
-
-            stem = resolve_stemmer(cfg.stemmer)
-            terms = {stem(t) for t in terms}
-        return sorted(terms)
 
     def warm_scoring_cache(self, num_partitions: int | None = None) -> None:
         """Pay the postings→doc_id re-layout ONCE and reuse it for every
@@ -296,7 +311,7 @@ class BayesianBM25Scorer:
         scorer.py:564-590); for sparse output at scale use
         ``get_probabilities_df``."""
         self._require()
-        qdf = self._maybe_stem(queries_to_df(self.spark, [query_tokens]))
+        qdf = queries_to_df(self.spark, self._normalize([query_tokens]))
         dense = Q.get_probabilities(
             self._index.postings, qdf, self._index.params, self._index.avgdl,
             all_docs=self._index.doc_stats, n_buckets=self._index.config.n_buckets,
@@ -338,15 +353,11 @@ class MultiFieldScorer:
     def index(self, docs, show_progress: bool = False) -> None:
         """Accepts ``list[dict[field, list[str]]]`` (reference shape) or a
         DataFrame with doc_id + one text column per field."""
-        if isinstance(docs, DataFrame):
-            df = docs
-        else:
-            rows = [
-                tuple([i] + [" ".join(d[f]) for f in self.fields])
-                for i, d in enumerate(docs)
-            ]
-            schema = "doc_id long, " + ", ".join(f"{f} string" for f in self.fields)
-            df = self.spark.createDataFrame(rows, schema)
+        df = (
+            docs
+            if isinstance(docs, DataFrame)
+            else _fields_from_tokens(self.spark, docs, self.fields)
+        )
         self._index = MFO.build_multi_field_index(
             self.spark, df, self.fields, self._path,
             weights=self.field_weights, config=self._config, alpha=self.alpha,
@@ -360,15 +371,11 @@ class MultiFieldScorer:
         if self._index is None:
             raise RuntimeError("Call index() before add_documents().")
         n_docs = max(fi.n_docs for fi in self._index.per_field.values())
-        if isinstance(docs, DataFrame):
-            df = docs
-        else:
-            rows = [
-                tuple([n_docs + i] + [" ".join(d[f]) for f in self.fields])
-                for i, d in enumerate(docs)
-            ]
-            schema = "doc_id long, " + ", ".join(f"{f} string" for f in self.fields)
-            df = self.spark.createDataFrame(rows, schema)
+        df = (
+            docs
+            if isinstance(docs, DataFrame)
+            else _fields_from_tokens(self.spark, docs, self.fields, start_id=n_docs)
+        )
         self._index = MFO.add_documents_multi_field(
             self._index, df, self._path + "_v2"
         )

@@ -989,14 +989,12 @@ def _estimate_params(
         .collect()
     )
     tokens_by_id = {int(r["doc_id"]): list(r["terms"]) for r in sampled}
-    queries = [
-        (qid, tokens_by_id[did])
-        for qid, did in enumerate(sample_ids)
-        if tokens_by_id.get(did)
-    ]
+    # sample order: query ids 0..n-1 follow it, so per_query_scores below
+    # keeps the reference's query order
+    queries = [tokens_by_id[did] for did in sample_ids if tokens_by_id.get(did)]
     if not queries:
         return _params_from_scores([], cfg, n_docs)
-    qdf = spark.createDataFrame(queries, schema="query_id long, terms array<string>")
+    qdf = Q.local_query_terms(spark, queries)
     # co_partition=False is deliberate: the default query plan repartitions
     # the WHOLE postings table by doc_id before the broadcast join — right
     # for large query batches (moves |postings| once instead of the joined
@@ -1007,7 +1005,7 @@ def _estimate_params(
     # 1M docs (183s of a 183s parallel-group wall).
     scored = Q.score_queries(
         postings, qdf, n_buckets=cfg.n_buckets, co_partition=False,
-        driver_terms=sorted({t for _, ts in queries for t in ts}),
+        driver_terms=sorted({t for ts in queries for t in ts}),
         # α/β/base-rate read only the score column — skip the
         # tf_match/doc_len aggregates (identical scores, ~40% less agg
         # state; params is the 1M build's critical-path phase)

@@ -3,6 +3,7 @@
 Spark lifecycle of a query batch (SURVEY.md §3.1):
 
     queries(query_id, terms) → explode+dedupe terms (qtf weights)
+      (or (query_id, term, qtf) counted on the driver: local_query_terms)
       → [shuffle 1] join postings on term   (query side broadcast — it is
         always tiny relative to the index)
       → [shuffle 2] groupBy(query_id, doc_id).sum(impact·qtf)
@@ -24,11 +25,50 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+from collections import Counter
+
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from bayesian_bm25_spark.functions import columns as C
 from bayesian_bm25_spark.kernel.transform import TransformParams
+
+
+_QUERY_TERMS_SCHEMA = StructType(
+    [
+        StructField("query_id", LongType(), False),
+        StructField("term", StringType(), False),
+        StructField("qtf", LongType(), False),
+    ]
+)
+
+
+def local_query_terms(spark: SparkSession, token_lists: list[list[str]]) -> DataFrame:
+    """(query_id, term, qtf) counted on the driver, for query batches that
+    already live there as token lists: query ids are ``0..n-1`` in list
+    order, and an empty query has no rows.
+
+    The frame comes from a ``pyarrow.Table``, so Spark plans it as a
+    ``LocalRelation``: no Python worker reads it, and ``query_terms``
+    passes it through without the explode / group-by and its exchange.
+    """
+    qids, terms, qtfs = [], [], []
+    for qid, tokens in enumerate(token_lists):
+        for term, qtf in Counter(tokens).items():
+            qids.append(qid)
+            terms.append(term)
+            qtfs.append(qtf)
+    table = pa.table(
+        {
+            "query_id": pa.array(qids, pa.int64()),
+            "term": pa.array(terms, pa.string()),
+            "qtf": pa.array(qtfs, pa.int64()),
+        }
+    )
+    return spark.createDataFrame(table, schema=_QUERY_TERMS_SCHEMA)
 
 
 def query_terms(queries: DataFrame) -> DataFrame:
@@ -37,7 +77,14 @@ def query_terms(queries: DataFrame) -> DataFrame:
     Duplicate query tokens contribute once per occurrence to the score
     (qtf weight) but only once to the distinct-match count used by the
     tf prior (reference scorer.py:592-601).
+
+    A frame that is already (query_id, term, qtf) — ``local_query_terms``
+    — is returned unchanged; a (query_id, terms) frame is exploded and
+    counted in Spark.
     """
+    cols = set(queries.columns)
+    if {"term", "qtf"} <= cols and "terms" not in cols:
+        return queries
     return (
         queries.select("query_id", F.explode("terms").alias("term"))
         .groupBy("query_id", "term")
@@ -176,21 +223,35 @@ def score_queries(
     )
 
 
-def with_probability(
-    scored: DataFrame, params: TransformParams, avgdl: float, prior: F.Column | None = None
-) -> DataFrame:
-    """Attach the calibrated probability column (pure Column math)."""
+def _probability_expr(
+    alpha: float, beta: float, base_rate: float | None, mode: str, avgdl: float,
+    prior: Column | None = None,
+) -> Column:
     prob = C.score_to_probability(
         F.col("score"),
         F.col("tf_match").cast("double"),
-        F.col("doc_len").cast("double") / F.lit(float(avgdl)),
-        alpha=params.alpha,
-        beta=params.beta,
-        base_rate=params.base_rate,
-        mode=params.mode,
+        F.col("doc_len").cast("double") / F.lit(avgdl),
+        alpha=alpha,
+        beta=beta,
+        base_rate=base_rate,
+        mode=mode,
         prior=prior,
     )
-    return scored.withColumn("probability", F.when(F.col("score") > 0.0, prob).otherwise(F.lit(0.0)))
+    return F.when(F.col("score") > 0.0, prob).otherwise(F.lit(0.0))
+
+
+# One Column per parameter set: building the expression tree goes through
+# py4j node by node, which cost more than a small batch's withColumn.
+_probability_col = functools.lru_cache(maxsize=64, typed=True)(_probability_expr)
+
+
+def with_probability(
+    scored: DataFrame, params: TransformParams, avgdl: float, prior: Column | None = None
+) -> DataFrame:
+    """Attach the calibrated probability column (pure Column math)."""
+    key = (params.alpha, params.beta, params.base_rate, params.mode, float(avgdl))
+    prob = _probability_col(*key) if prior is None else _probability_expr(*key, prior)
+    return scored.withColumn("probability", prob)
 
 
 def topk(

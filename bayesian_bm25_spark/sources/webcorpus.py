@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -152,17 +153,26 @@ def generate_queries(
     return out
 
 
+_QUERY_SCHEMA = StructType(
+    [
+        StructField("query_id", LongType(), False),
+        StructField("terms", ArrayType(StringType()), False),
+    ]
+)
+
+
 def queries_to_df(spark: SparkSession, queries: list[list[str]]) -> DataFrame:
-    """(query_id long, terms array<string>) — the query-side input table."""
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("terms", ArrayType(StringType()), False),
-        ]
+    """(query_id long, terms array<string>) — the query-side input table.
+
+    Built from a ``pyarrow.Table``, so Spark plans it as a
+    ``LocalRelation``: no ``parallelize`` and no Python worker reads it."""
+    table = pa.table(
+        {
+            "query_id": pa.array(range(len(queries)), pa.int64()),
+            "terms": pa.array([list(q) for q in queries], pa.list_(pa.string())),
+        }
     )
-    return spark.createDataFrame(
-        [(i, list(q)) for i, q in enumerate(queries)], schema=schema
-    )
+    return spark.createDataFrame(table, schema=_QUERY_SCHEMA)
 
 
 def extract_text(pages: DataFrame) -> DataFrame:

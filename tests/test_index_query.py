@@ -507,6 +507,124 @@ class TestMaxScore:
         assert e == p
 
 
+class TestFacadeDriverQueries:
+    """The facade builds a token-list batch's query-term relation on the
+    driver (normalized, counted, Arrow-local); results must equal the
+    DataFrame path (Spark-side stopwords, stem UDF and explode) bit for
+    bit."""
+
+    TEXTS = [
+        "the runners were running to the running track",
+        "cats and dogs are running",
+        "a cat chased the dogs over the hills",
+        "hills and tracks for the runner",
+        "databases of connected things",
+    ]
+    # duplicated term, all-stopword query, empty query, unknown term
+    BATCH = [
+        ["running", "cats", "running"],
+        ["the", "a", "of"],
+        [],
+        ["zzzunknownterm"],
+        ["Runner", "hills", "the", "dogs"],
+    ]
+
+    @pytest.fixture(scope="class")
+    def scorer(self, spark, tmp_path_factory):
+        from bayesian_bm25_spark.api import BayesianBM25Scorer
+
+        eng = BayesianBM25Scorer(
+            spark, index_path=str(tmp_path_factory.mktemp("idx_norm")),
+            stemmer="porter", stopwords="english", base_rate="auto",
+        )
+        eng.index(pages_df_from_texts(spark, self.TEXTS))
+        return eng
+
+    @pytest.mark.parametrize("maxscore", [False, True])
+    def test_normalization_parity_with_retrieve_df(self, scorer, maxscore, monkeypatch):
+        from bayesian_bm25_spark.api import _collect_topk
+
+        if maxscore:
+            monkeypatch.setattr(Q, "_MAXSCORE_MIN_DOCS", 0)
+        k = 4
+        want_ids, want_p = _collect_topk(
+            scorer.retrieve_df(queries_to_df(scorer.spark, self.BATCH), k=k),
+            len(self.BATCH), k, "probability",
+        )
+        ids, probs = scorer.retrieve(self.BATCH, k=k)
+        assert ids.tolist() == want_ids.tolist()
+        assert probs.tolist() == want_p.tolist()
+        # the batch exercises matches and the empty rows alike
+        assert (ids[0] >= 0).any() and (ids[4] >= 0).any()
+        assert (ids[1:4] == -1).all()
+
+    def test_explain_and_probabilities_parity(self, scorer):
+        k = 4
+        ids, probs = scorer.retrieve(self.BATCH, k=k)
+        res = scorer.retrieve(self.BATCH, k=k, explain=True)
+        assert res.doc_ids.tolist() == ids.tolist()
+        assert res.probabilities.tolist() == probs.tolist()
+        dense = scorer.get_probabilities(self.BATCH[0])
+        sparse = {
+            int(r["doc_id"]): float(r["probability"])
+            for r in scorer.get_probabilities_df(
+                queries_to_df(scorer.spark, [self.BATCH[0]])
+            ).collect()
+        }
+        assert sparse and all(dense[d] == p for d, p in sparse.items())
+        assert all(dense[d] == 0.0 for d in range(len(self.TEXTS)) if d not in sparse)
+
+    def test_empty_batch(self, scorer):
+        ids, probs = scorer.retrieve([], k=3)
+        assert ids.shape == (0, 3) and probs.shape == (0, 3)
+
+    def test_local_query_terms_equal_exploded(self, spark):
+        batch = [["b", "a", "b"], [], ["c"], ["a", "a", "a"]]
+        local = Q.local_query_terms(spark, batch)
+        assert Q.query_terms(local) is local
+        got = sorted(tuple(r) for r in local.collect())
+        want = sorted(
+            tuple(r) for r in Q.query_terms(queries_to_df(spark, batch))
+            .select("query_id", "term", "qtf").collect()
+        )
+        assert got == want
+        assert [(f.name, f.dataType.simpleString(), f.nullable) for f in local.schema] == [
+            ("query_id", "bigint", False), ("term", "string", False), ("qtf", "bigint", False),
+        ]
+
+    def test_probability_column_memo_keys(self, six_index):
+        """Alternating parameter sets and avgdl values in one session:
+        each memoized column equals a freshly built one."""
+        from bayesian_bm25_spark.functions import columns as C
+
+        qdf = queries_to_df(six_index.spark, [["cat"], ["dog", "the"]])
+        scored = Q.score_queries(six_index.postings, qdf).cache()
+        p1 = TransformParams(alpha=1.3, beta=0.4, base_rate=0.05)
+        p2 = TransformParams(alpha=0.7, beta=1.1)
+        try:
+            for params, avgdl in [(p1, 4.0), (p2, 4.0), (p1, 7.5), (p2, 7.5), (p1, 4.0)]:
+                fresh = C.score_to_probability(
+                    F.col("score"),
+                    F.col("tf_match").cast("double"),
+                    F.col("doc_len").cast("double") / F.lit(avgdl),
+                    alpha=params.alpha, beta=params.beta,
+                    base_rate=params.base_rate, mode=params.mode,
+                )
+                want = {
+                    (r["query_id"], r["doc_id"]): r["p"]
+                    for r in scored.withColumn(
+                        "p", F.when(F.col("score") > 0.0, fresh).otherwise(F.lit(0.0))
+                    ).collect()
+                }
+                got = {
+                    (r["query_id"], r["doc_id"]): r["probability"]
+                    for r in Q.with_probability(scored, params, avgdl).collect()
+                }
+                assert want and got == want, (params, avgdl)
+        finally:
+            scored.unpersist()
+
+
 class TestAssignDocIds:
     """Rank-identity of the distributed (no-global-window) id assignment."""
 

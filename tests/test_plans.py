@@ -125,6 +125,46 @@ class TestScoringPlan:
         assert "term_bucket" in scan.split("]")[0]
 
 
+class TestFacadeBatchPlan:
+    def test_warm_facade_batch_runs_three_jobs(self, spark, tmp_path, monkeypatch):
+        """A warmed facade batch builds its query-term relation on the
+        driver: the broadcast sits directly on a LocalTableScan, no
+        exchange groups (query_id, term), and the whole batch is three
+        Spark jobs (broadcast, scan/join/agg, top-k)."""
+        import re
+
+        from bayesian_bm25_spark import api
+        from bayesian_bm25_spark.sources.webcorpus import generate_queries
+
+        scorer = api.BayesianBM25Scorer(spark, index_path=str(tmp_path / "idx"))
+        scorer.index(generate_pages(spark, 300, seed=5, num_partitions=4))
+        scorer.warm_scoring_cache()
+        queries = generate_queries(300, seed=5, n_queries=20)
+        scorer.retrieve(queries[:10], k=10)
+
+        frames = []
+
+        def spy(df, *args):
+            frames.append(df)
+            return collect(df, *args)
+
+        collect = api._collect_topk
+        monkeypatch.setattr(api, "_collect_topk", spy)
+        sc = spark.sparkContext
+        sc.setJobGroup("facade-batch", "one warm facade batch")
+        try:
+            ids, _ = scorer.retrieve(queries[10:], k=10)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert (ids >= 0).any()
+        assert len(sc.statusTracker().getJobIdsForGroup("facade-batch")) == 3
+        plan = plan_of(frames[0])
+        assert re.search(r"BroadcastExchange [^\n]*\n\s*\+- LocalTableScan", plan), plan
+        assert not re.search(r"Exchange hashpartitioning\(query_id#\d+L?, term", plan), plan
+        scorer._drop_scoring_cache()
+
+
 class TestBuildPlan:
     def test_theta_cutoff_uses_window_group_limit(self, plan_idx):
         from pyspark.sql import Window
