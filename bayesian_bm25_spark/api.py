@@ -278,7 +278,9 @@ class BayesianBM25Scorer:
         later retrieve call (query.prepartition_for_scoring).  Without
         this, each batch re-shuffles the postings into the scoring
         layout — the right default for one-shot jobs, wasteful for a
-        long-lived service answering many batches."""
+        long-lived service answering many batches.  The persisted frame
+        holds only the four scoring columns, so a warmed batch skips the
+        term_bucket prune and compiles no code."""
         self._require()
         if self._scoring_src is None:
             self._scoring_src = Q.prepartition_for_scoring(

@@ -94,6 +94,10 @@ def _docs_tokens(
     raw = _read(spark, sf_dir, "documents")
     if spread:
         raw = _spread(raw, sf_dir, "documents", min_bytes=min_bytes)
+    return _tokenized(raw)
+
+
+def _tokenized(raw: DataFrame) -> DataFrame:
     return (
         raw.select("doc_id", C.tokenize(F.col("text")).alias("tokens"), "lang", "text")
         .withColumn("doc_len", F.size("tokens").cast("long"))
@@ -101,7 +105,10 @@ def _docs_tokens(
 
 
 def _corpus_postings(spark: SparkSession, sf_dir: str, method: str = "lucene") -> tuple:
-    docs = _docs_tokens(spark, sf_dir)
+    # one read feeds both frames: each spark.read.parquet is its own
+    # schema-inference job
+    raw = _read(spark, sf_dir, "documents")
+    docs = _tokenized(raw)
     row = docs.agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("a")).collect()[0]
     n_docs, avgdl = int(row["n"]), float(row["a"])
     # The postings plan consumes tf TWICE (per-term df agg + probe side
@@ -117,7 +124,7 @@ def _corpus_postings(spark: SparkSession, sf_dir: str, method: str = "lucene") -
     # cost (5-session A/B, family total 16.2-17.8s unspread vs
     # 21.8-28.6s spread at sf0.1) — while a multi-MB single split would
     # serialize the Arrow token-count pass.
-    tf_docs = _docs_tokens(spark, sf_dir, spread=True, min_bytes=4 << 20)
+    tf_docs = _tokenized(_spread(raw, sf_dir, "documents", min_bytes=4 << 20))
     tf = _local_tf(tf_docs).persist()
     postings = compute_postings(tf, n_docs, avgdl, IndexConfig(method=method))
     return docs, postings, n_docs, avgdl

@@ -2,25 +2,33 @@
 
 Spark lifecycle of a query batch (SURVEY.md §3.1):
 
-    queries(query_id, terms) → explode+dedupe terms (qtf weights)
+    queries(query_id, terms) → explode + groupBy(query_id, term) qtf
       (or (query_id, term, qtf) counted on the driver: local_query_terms)
-      → [shuffle 1] join postings on term   (query side broadcast — it is
-        always tiny relative to the index)
-      → [shuffle 2] groupBy(query_id, doc_id).sum(impact·qtf)
+      → postings: the term_bucket-pruned parquet scan, then
+        [exchange] repartition(doc_id) — or a prepartition_for_scoring
+        frame, which paid that exchange once for every batch
+      → BroadcastHashJoin on term (the query side is always tiny
+        relative to the index)
+      → groupBy(query_id, doc_id).sum(impact·qtf): NO exchange, the
+        doc_id layout already satisfies it
+      → [exchange] per-query window top-k with pinned tie-break
+        (score desc, doc_id asc); WindowGroupLimit pre-reduces each map
+        partition to ≤ k rows per query
       → probability column expressions (pure codegen, no Python)
-      → [shuffle 3] per-query window top-k with pinned tie-break
-        (score desc, doc_id asc)
 
 Scale notes:
 - ``doc_len`` is denormalized into the postings rows at build time, so
   scoring needs NO join against a per-doc stats table (at 10^12 docs that
   join would dwarf everything else).
-- The postings parquet is laid out by ``term_bucket``; the scoring join
+- The postings parquet is laid out by ``term_bucket``; the scan of it
   first prunes buckets to those containing query terms, so a 100-term
   query batch reads a fraction of the index (partition pruning = the
-  Spark analog of posting-list lookup).
-- Aggregation is partial (map-side combine) before the shuffle; AQE
-  handles Zipf skew on hot terms.
+  Spark analog of posting-list lookup).  The persisted scoring layout
+  has no ``term_bucket`` column: every doc_id partition holds every
+  bucket, so a filter there could skip nothing.
+- The Columns every batch's plan repeats (aggregates, group keys, the
+  top-k window, the output list) are built once per key: each is a
+  py4j round-trip per node.
 """
 
 from __future__ import annotations
@@ -127,11 +135,15 @@ def prune_query_terms_buckets(
     return postings.join(F.broadcast(bucket_rel), "term_bucket", "left_semi")
 
 
+# the postings columns scoring reads, and the warm layout's schema
+_SCORE_COLS = ["term", "doc_id", "impact", "doc_len"]
+
+
 def prepartition_for_scoring(
     postings: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
-    """doc_id-hash-repartitioned postings, PERSISTED for reuse across
-    query batches.
+    """(term, doc_id, impact, doc_len) postings, doc_id-hash-repartitioned
+    and PERSISTED for reuse across query batches.
 
     Both retrieval plans re-layout the postings by doc_id per batch (the
     co-partitioning that lets the scoring agg run without an exchange).
@@ -142,15 +154,22 @@ def prepartition_for_scoring(
     on the postings side.  MEMORY_AND_DISK: on a cluster this is the
     standard materialized re-layout (disk-backed where RAM is short).
 
-    Note: term_bucket scan pruning happens before this at build layout
-    time; filters on the persisted frame evaluate in memory (cheap) but
-    no longer skip file reads — the trade is one corpus read vs a
-    corpus shuffle per batch.
+    Only the four scoring columns are kept.  Every doc_id partition
+    holds every term bucket, so a bucket filter on this frame would skip
+    nothing; without ``term_bucket`` the scoring plans skip the prune,
+    and no batch puts its bucket list into generated code (a new literal
+    is a new Janino compilation per batch).  Bucket pruning stays on the
+    postings parquet scan, where it skips files.  The narrower frame
+    also shrinks the warm-up shuffle and the cached bytes.
     """
     from pyspark.storagelevel import StorageLevel
 
     p = num_partitions or postings.sparkSession.sparkContext.defaultParallelism * 2
-    out = postings.repartition(p, "doc_id").persist(StorageLevel.MEMORY_AND_DISK)
+    out = (
+        postings.select(*_SCORE_COLS)
+        .repartition(p, "doc_id")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # EAGER materialization is load-bearing, not a warm-up nicety: until
     # the cache is built, consumers see UnknownPartitioning on the
     # InMemoryRelation and re-add the very exchange this function exists
@@ -158,6 +177,18 @@ def prepartition_for_scoring(
     # exchange-free consumer plan)
     out.count()
     return out
+
+
+def _scoring_columns(src: DataFrame, cols: list[str]) -> DataFrame:
+    """``src`` narrowed to ``cols`` (tf/df/term_bucket would otherwise
+    ride the doc_id exchange and widen every join probe row).
+    Projection preserves partitioning, so a prepartition_for_scoring
+    frame keeps its exchange-free layout; it already has exactly these
+    columns and is returned as is."""
+    have = src.columns
+    if have == cols or not set(cols) <= set(have):
+        return src
+    return src.select(*cols)
 
 
 def score_queries(
@@ -195,32 +226,14 @@ def score_queries(
     src = postings
     if n_buckets and "term_bucket" in postings.columns:
         src = prune_query_terms_buckets(postings, qt, n_buckets, driver_terms)
-    # project to the four columns scoring reads BEFORE the exchange /
-    # join probe (guide §2.3): tf/df/term_bucket otherwise ride the
-    # doc_id repartition and widen every probe row.  Projection
-    # preserves partitioning, so a prepartition_for_scoring frame keeps
-    # its exchange-free layout (and the in-memory columnar cache prunes
-    # to the selected columns).
-    score_cols = (
-        ["term", "doc_id", "impact"]
-        if score_only
-        else ["term", "doc_id", "impact", "doc_len"]
-    )
-    if set(score_cols) <= set(src.columns):
-        src = src.select(*score_cols)
+    # project BEFORE the exchange / join probe; the in-memory columnar
+    # cache of a persisted frame prunes to the selected columns too
+    src = _scoring_columns(src, _SCORE_COLS[:3] if score_only else _SCORE_COLS)
     if co_partition:
         p = postings.sparkSession.sparkContext.defaultParallelism * 2
         src = src.repartition(p, "doc_id")
-    joined = src.join(F.broadcast(qt), "term")
-    if score_only:
-        return joined.groupBy("query_id", "doc_id").agg(
-            F.sum(F.col("impact") * F.col("qtf")).alias("score")
-        )
-    return joined.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("impact") * F.col("qtf")).alias("score"),
-        F.count(F.lit(1)).alias("tf_match"),
-        F.first("doc_len").alias("doc_len"),
-    )
+    keys, aggs = _score_aggregation(score_only)
+    return src.join(F.broadcast(qt), "term").groupBy(*keys).agg(*aggs)
 
 
 def _probability_expr(
@@ -240,9 +253,39 @@ def _probability_expr(
     return F.when(F.col("score") > 0.0, prob).otherwise(F.lit(0.0))
 
 
-# One Column per parameter set: building the expression tree goes through
-# py4j node by node, which cost more than a small batch's withColumn.
+# Batch-invariant Columns, built once per key: building an expression
+# tree goes through py4j node by node, which cost more than a small
+# batch's withColumn.  Spark 4 turns a Column into a plan expression
+# (with fresh expression ids) each time a DataFrame uses it, so one
+# Column serves any number of plans.
 _probability_col = functools.lru_cache(maxsize=64, typed=True)(_probability_expr)
+
+
+@functools.lru_cache(maxsize=None)
+def _score_aggregation(score_only: bool) -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """(group keys, aggregates) of the (query_id, doc_id) scoring agg."""
+    keys = (F.col("query_id"), F.col("doc_id"))
+    score = F.sum(F.col("impact") * F.col("qtf")).alias("score")
+    if score_only:
+        return keys, (score,)
+    return keys, (
+        score,
+        F.count(F.lit(1)).alias("tf_match"),
+        F.first("doc_len").alias("doc_len"),
+    )
+
+
+@functools.lru_cache(maxsize=64, typed=True)
+def _rank_columns(order_by: str, k: int) -> tuple[Column, Column]:
+    """``topk``'s row_number over the pinned window, and ``rank <= k``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(order_by), F.asc("doc_id"))
+    return F.row_number().over(w), F.col("rank") <= k
+
+
+@functools.lru_cache(maxsize=None)
+def _result_columns() -> tuple[Column, ...]:
+    """The (query_id, rank, doc_id, score, probability) output list."""
+    return tuple(F.col(c) for c in ("query_id", "rank", "doc_id", "score", "probability"))
 
 
 def with_probability(
@@ -262,11 +305,8 @@ def topk(
     """Per-query top-k with the pinned deterministic tie-break
     (order_by desc, doc_id asc) — rank-identity requires this on both the
     Spark and the oracle side."""
-    w = Window.partitionBy("query_id").orderBy(F.desc(order_by), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    rank, keep = _rank_columns(order_by, k)
+    return scored.withColumn("rank", rank).where(keep)
 
 
 def retrieve(
@@ -289,9 +329,7 @@ def retrieve(
         co_partition=co_partition,
     )
     ranked = topk(scored, k=k)
-    return with_probability(ranked, params, avgdl).select(
-        "query_id", "rank", "doc_id", "score", "probability"
-    )
+    return with_probability(ranked, params, avgdl).select(*_result_columns())
 
 
 def get_probabilities(
@@ -408,10 +446,8 @@ def retrieve_maxscore(
     if n_buckets and "term_bucket" in postings.columns:
         src = prune_query_terms_buckets(postings, qt, n_buckets, driver_terms)
     # narrow to the scoring columns before every downstream pass /
-    # exchange (guide §2.3) — same projection score_queries applies
-    score_cols = ["term", "doc_id", "impact", "doc_len"]
-    if set(score_cols) <= set(src.columns):
-        src = src.select(*score_cols)
+    # exchange — same projection score_queries applies
+    src = _scoring_columns(src, _SCORE_COLS)
 
     # -- A: θ from impact-ordered prefixes ---------------------------------
     # restrict term_stats to the query batch FIRST (broadcast the tiny
@@ -474,15 +510,10 @@ def retrieve_maxscore(
     cand_p = candidates.repartition(p, "doc_id")
     joined = src_p.join(F.broadcast(qt), "term")
     exact = joined.join(cand_p.hint("shuffle_hash"), ["query_id", "doc_id"])
-    scored = exact.groupBy("query_id", "doc_id").agg(
-        F.sum(F.col("impact") * F.col("qtf")).alias("score"),
-        F.count(F.lit(1)).alias("tf_match"),
-        F.first("doc_len").alias("doc_len"),
-    )
+    keys, aggs = _score_aggregation(False)
+    scored = exact.groupBy(*keys).agg(*aggs)
     ranked = topk(scored, k=k)
-    return with_probability(ranked, params, avgdl).select(
-        "query_id", "rank", "doc_id", "score", "probability"
-    )
+    return with_probability(ranked, params, avgdl).select(*_result_columns())
 
 
 # retrieve_auto routes to MaxScore from this corpus size on
@@ -541,21 +572,6 @@ def term_wand_bounds(term_stats: DataFrame, params: TransformParams, p_max: floa
         "wand_ub",
         C.wand_upper_bound(
             F.col("max_impact"),
-            alpha=params.alpha,
-            beta=params.beta,
-            base_rate=params.base_rate,
-            p_max=p_max,
-        ),
-    )
-
-
-def block_bayesian_bounds(block_max: DataFrame, params: TransformParams, p_max: float = 0.9) -> DataFrame:
-    """block_max + ``block_ub``: per-(term, block) Bayesian bound
-    (reference Corollary 7.4.2) — tighter than the term-level WAND bound."""
-    return block_max.withColumn(
-        "block_ub",
-        C.wand_upper_bound(
-            F.col("block_max_impact"),
             alpha=params.alpha,
             beta=params.beta,
             base_rate=params.base_rate,

@@ -625,6 +625,67 @@ class TestFacadeDriverQueries:
             scored.unpersist()
 
 
+    def test_topk_column_memo_keys(self, six_index):
+        """Alternating k in one session: each memoized top-k equals one
+        built from a fresh window."""
+        from pyspark.sql import Window
+
+        qdf = queries_to_df(six_index.spark, [["cat"], ["dog", "the"], ["machine"]])
+        scored = Q.score_queries(six_index.postings, qdf).cache()
+        try:
+            for k in (3, 10, 3, 10):
+                w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+                fresh = scored.withColumn("rank", F.row_number().over(w)).where(
+                    F.col("rank") <= k
+                )
+                cols = ["query_id", "rank", "doc_id", "score"]
+                want = sorted(tuple(r) for r in fresh.select(*cols).collect())
+                got = sorted(tuple(r) for r in Q.topk(scored, k=k).select(*cols).collect())
+                assert want and got == want, k
+        finally:
+            scored.unpersist()
+
+
+class TestWarmEqualsCold:
+    """The persisted scoring layout (four columns, no bucket prune) must
+    give the facade the same ids and probabilities, bit for bit, as the
+    cold bucket-pruned scan."""
+
+    N_DOCS = 400
+
+    @pytest.fixture(scope="class")
+    def scorers(self, spark, tmp_path_factory):
+        from bayesian_bm25_spark.api import BayesianBM25Scorer
+
+        pages = generate_pages(spark, self.N_DOCS, seed=21, num_partitions=4)
+        out = {}
+        for method in ("lucene", "robertson"):
+            out[method] = BayesianBM25Scorer(
+                spark, index_path=str(tmp_path_factory.mktemp(f"idx_warm_{method}")),
+                method=method, base_rate="auto",
+            )
+            out[method].index(pages)
+        return out
+
+    @pytest.mark.parametrize(
+        "method,maxscore", [("lucene", False), ("robertson", False), ("lucene", True)]
+    )
+    def test_warm_retrieve_equals_cold(self, scorers, method, maxscore, monkeypatch):
+        if maxscore:
+            monkeypatch.setattr(Q, "_MAXSCORE_MIN_DOCS", 0)
+        scorer = scorers[method]
+        queries = generate_queries(self.N_DOCS, seed=22, n_queries=20)
+        cold_ids, cold_p = scorer.retrieve(queries, k=10)
+        scorer.warm_scoring_cache()
+        try:
+            ids, probs = scorer.retrieve(queries, k=10)
+        finally:
+            scorer._drop_scoring_cache()
+        assert (ids >= 0).any()
+        assert ids.tolist() == cold_ids.tolist()
+        assert probs.tolist() == cold_p.tolist()
+
+
 class TestAssignDocIds:
     """Rank-identity of the distributed (no-global-window) id assignment."""
 

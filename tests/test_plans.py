@@ -125,6 +125,20 @@ class TestScoringPlan:
         assert "term_bucket" in scan.split("]")[0]
 
 
+@pytest.fixture(scope="class")
+def warm_scorer(spark, tmp_path_factory):
+    """A facade over 300 Zipf pages with its scoring layout warmed."""
+    from bayesian_bm25_spark import api
+
+    scorer = api.BayesianBM25Scorer(
+        spark, index_path=str(tmp_path_factory.mktemp("idx_warm"))
+    )
+    scorer.index(generate_pages(spark, 300, seed=5, num_partitions=4))
+    scorer.warm_scoring_cache()
+    yield scorer
+    scorer._drop_scoring_cache()
+
+
 class TestFacadeBatchPlan:
     def test_warm_facade_batch_runs_three_jobs(self, spark, tmp_path, monkeypatch):
         """A warmed facade batch builds its query-term relation on the
@@ -163,6 +177,69 @@ class TestFacadeBatchPlan:
         assert re.search(r"BroadcastExchange [^\n]*\n\s*\+- LocalTableScan", plan), plan
         assert not re.search(r"Exchange hashpartitioning\(query_id#\d+L?, term", plan), plan
         scorer._drop_scoring_cache()
+
+    def test_warm_retrieve_df_runs_four_jobs(self, warm_scorer):
+        """DataFrame queries on the warmed layout: the facade's three jobs
+        plus the qtf group-by; no bucket distinct and no broadcast of it,
+        because the persisted frame has no term_bucket to prune."""
+        from bayesian_bm25_spark.sources.webcorpus import generate_queries
+
+        scorer = warm_scorer
+        spark = scorer.spark
+        qdf = queries_to_df(spark, generate_queries(300, seed=6, n_queries=10))
+        sc = spark.sparkContext
+        sc.setJobGroup("retrieve-df", "one warm retrieve_df batch")
+        try:
+            rows = scorer.retrieve_df(qdf, k=10).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert rows
+        assert len(sc.statusTracker().getJobIdsForGroup("retrieve-df")) == 4
+
+    def test_warm_layout_is_the_four_scoring_columns(self, warm_scorer, monkeypatch):
+        """The persisted layout keeps only what scoring reads, so a
+        warmed batch plan has no term_bucket predicate, still reads the
+        cache, and never shuffles on the (query_id, doc_id) agg key."""
+        import re
+
+        from bayesian_bm25_spark import api
+        from bayesian_bm25_spark.sources.webcorpus import generate_queries
+
+        scorer = warm_scorer
+        assert scorer._scoring_src.columns == ["term", "doc_id", "impact", "doc_len"]
+        frames = []
+
+        def spy(df, *args):
+            frames.append(df)
+            return collect(df, *args)
+
+        collect = api._collect_topk
+        monkeypatch.setattr(api, "_collect_topk", spy)
+        ids, _ = scorer.retrieve(generate_queries(300, seed=7, n_queries=10), k=10)
+        assert (ids >= 0).any()
+        plan = plan_of(frames[0])
+        # (the cached relation still prints the parquet scan it was
+        # built from, term_bucket column included, with no filter on it)
+        assert not re.search(r"term_bucket#\d+L? IN|isnotnull\(term_bucket", plan), plan
+        assert "LeftSemi" not in plan
+        assert "InMemoryTableScan" in plan
+        assert not re.search(r"hashpartitioning\(query_id#\d+L?, doc_id", plan), plan
+
+    def test_warm_batch_compiles_no_code(self, warm_scorer):
+        """A second distinct batch on a warmed facade reuses every
+        generated class: nothing batch-specific (such as a bucket list)
+        reaches codegen."""
+        from bayesian_bm25_spark.sources.webcorpus import generate_queries
+
+        scorer = warm_scorer
+        metrics = scorer.spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        queries = generate_queries(300, seed=8, n_queries=20)
+        scorer.retrieve(queries[:10], k=10)
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        ids, _ = scorer.retrieve(queries[10:], k=10)
+        assert (ids >= 0).any()
+        assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
 
 
 class TestBuildPlan:
