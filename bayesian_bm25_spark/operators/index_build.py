@@ -15,9 +15,9 @@ the build resumes from any boundary — north rule):
                     The merge holds every term's decoded arrays, so it
                     also emits df/max/min impact, the θ-pass
                     prefix_cutoff and per-block maxima as extra columns
-      └─ term_stats: column-pruned derivation of posting_lists (payload
-                    bytes unread); build_compressed=False scans postings
-      └─ block_max:  explode of the posting_lists block arrays (same)
+         └─ term_stats: column-pruned select of posting_lists (payload
+                    bytes unread)
+         └─ block_max:  explode of the posting_lists block arrays (same)
       └─ params.json: seeded pseudo-query sampling → α/β/base-rate on
                     the driver (numpy-exact, mirrors reference protocol)
 
@@ -57,6 +57,15 @@ from bayesian_bm25_spark.kernel.postings_codec import (
 from bayesian_bm25_spark.kernel.transform import TransformParams
 from bayesian_bm25_spark.plans import checkpoint as ckpt
 
+# Reference values (scorer.py): block_max blocks cover doc_id ranges of
+# BLOCK_SIZE; term_stats.prefix_cutoff is the PREFIX_LEN-th largest
+# impact (the MaxScore θ-pass depth); params score PSEUDO_QUERY_SAMPLE
+# docs drawn with default_rng(PSEUDO_QUERY_SEED).
+BLOCK_SIZE = 128
+PREFIX_LEN = 128
+PSEUDO_QUERY_SEED = 42
+PSEUDO_QUERY_SAMPLE = 50
+
 
 @dataclass
 class IndexConfig:
@@ -71,15 +80,7 @@ class IndexConfig:
     beta: float | None = None
     base_rate: float | str | None = None  # None | "auto" | float
     base_rate_method: str = "percentile"
-    block_size: int = 128
-    prefix_len: int = 128  # MaxScore θ-pass prefix depth
     n_buckets: int = 32  # term-hash layout buckets (partition pruning)
-    # write posting_lists and derive term_stats / block_max from its
-    # merge; False skips the compressed lists and scans postings for
-    # the two tables instead
-    build_compressed: bool = True
-    pseudo_query_seed: int = 42
-    pseudo_query_sample: int = 50
 
     def to_dict(self) -> dict:
         return {k: getattr(self, k) for k in self.__dataclass_fields__}
@@ -105,7 +106,7 @@ class BM25Index:
     n_docs: int
     avgdl: float
     params: TransformParams
-    posting_lists: DataFrame | None = None
+    posting_lists: DataFrame
     build_metrics: dict = field(default_factory=dict)
 
 
@@ -541,60 +542,20 @@ def _build_index_impl(
     docs, n_docs, avgdl, postings, serial_phase = _build_postings_stages(
         spark, path, cfg, docs_fn, force, tf_source, docs_inputs
     )
-    postings_dir = os.path.join(path, "postings")
-    term_stats_dir = os.path.join(path, "term_stats")
+    list_dir = os.path.join(path, "posting_lists")
 
-    def build_term_stats() -> DataFrame:
-        base = postings.groupBy("term").agg(
-            F.first("term_bucket").alias("term_bucket"),
-            F.first("df").alias("df"),
-            F.max("impact").alias("max_impact"),
-            # sign witness for the pruned query paths: MaxScore/threshold
-            # bounds are only valid for non-negative impacts (robertson
-            # idf goes negative for df > ~N/2) — query.py checks this
-            F.min("impact").alias("min_impact"),
-        )
-        # MaxScore θ-pass cutoff: the B-th largest impact per term.  The
-        # rank-≤-B window compiles to WindowGroupLimit (map-side top-B
-        # before the shuffle), so the Zipf head never sorts in one task.
-        w = Window.partitionBy("term").orderBy(F.desc("impact"), F.asc("doc_id"))
-        cutoff = (
-            postings.withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= cfg.prefix_len)
-            .groupBy("term")
-            .agg(F.min("impact").alias("prefix_cutoff"))
-        )
-        return base.join(cutoff, "term", "left")
-
-    block_max_dir = os.path.join(path, "block_max")
-
-    def build_block_max() -> DataFrame:
-        # blocks are doc-INDEX ranges (reference scorer.py:73: block b
-        # covers doc indices [b·bs, (b+1)·bs)): block_id = doc_id // bs —
-        # pure column math, no per-term sort, no Zipf-head straggler
-        return (
-            postings.withColumn(
-                "block_id", (F.col("doc_id") / cfg.block_size).cast("long")
-            )
-            .groupBy("term", "block_id")
-            .agg(F.max("impact").alias("block_max_impact"))
-        )
-
-    # everything past the postings checkpoint is INDEPENDENT (term_stats,
-    # block_max, the compressed-list chain, and param estimation all read
-    # only the postings/docs checkpoints) — submit them as concurrent
-    # Spark jobs from driver threads.  Per-stage fixed costs (job
-    # scheduling, AQE planning, parquet commit, driver math) overlap
-    # instead of serializing, which is where the N→4N scaling efficiency
-    # was going at small-to-mid corpus sizes; outputs land in separate
-    # checkpoint dirs, so resumability is unchanged.
+    # everything past the postings checkpoint is INDEPENDENT of params
+    # (the compressed-list chain and param estimation read only the
+    # postings/docs checkpoints) — submit them as concurrent Spark jobs
+    # from driver threads.  Per-stage fixed costs (job scheduling, AQE
+    # planning, parquet commit, driver math) overlap instead of
+    # serializing; outputs land in separate checkpoint dirs, so
+    # resumability is unchanged.
     #
-    # With build_compressed, the compressed-list merge already decodes
-    # every term's full posting arrays, so term_stats and block_max are
-    # derived from ITS checkpoint's extra columns (a tiny column-pruned
-    # scan — the payload bytes are never read) instead of each
-    # re-scanning the full postings checkpoint: one bulk postings pass
-    # instead of three.
+    # The compressed-list merge decodes every term's full posting
+    # arrays, so term_stats and block_max are derived from ITS
+    # checkpoint's extra columns (a tiny column-pruned scan — the
+    # payload bytes are never read): one bulk postings pass.
     from concurrent.futures import ThreadPoolExecutor
 
     t_group0 = time.time()
@@ -606,23 +567,6 @@ def _build_index_impl(
         phase_sec[name] = round(time.time() - t0, 2)
         return out
 
-    def term_artifacts(pool, src_dir: str, term_stats_fn, block_max_fn):
-        f_ts = pool.submit(
-            timed, "term_stats",
-            lambda: ckpt.run_stage(
-                spark, term_stats_dir, term_stats_fn,
-                stage="term_stats", inputs=[src_dir], force=force,
-            ),
-        )
-        f_bm = pool.submit(
-            timed, "block_max",
-            lambda: ckpt.run_stage(
-                spark, block_max_dir, block_max_fn,
-                stage="block_max", inputs=[src_dir], force=force,
-            ),
-        )
-        return f_ts.result(), f_bm.result()
-
     with ThreadPoolExecutor(max_workers=3) as pool:
         # params first: its chain (score 50 pseudo-queries → cache →
         # several small percentile/agg jobs) has the longest tail of
@@ -632,21 +576,27 @@ def _build_index_impl(
             timed, "params",
             lambda: _estimate_params(spark, docs, postings, cfg, n_docs),
         )
-        if cfg.build_compressed:
-            posting_lists = timed(
-                "compressed_lists",
-                lambda: _build_compressed_lists(spark, postings, path, cfg, force),
-            )
-            term_stats, block_max = term_artifacts(
-                pool, os.path.join(path, "posting_lists"),
+        posting_lists = timed(
+            "compressed_lists",
+            lambda: _build_posting_lists(spark, postings, path, force),
+        )
+        f_ts = pool.submit(
+            timed, "term_stats",
+            lambda: ckpt.run_stage(
+                spark, os.path.join(path, "term_stats"),
                 lambda: _derive_term_stats(posting_lists, cfg.n_buckets),
+                stage="term_stats", inputs=[list_dir], force=force,
+            ),
+        )
+        f_bm = pool.submit(
+            timed, "block_max",
+            lambda: ckpt.run_stage(
+                spark, os.path.join(path, "block_max"),
                 lambda: _derive_block_max(posting_lists),
-            )
-        else:
-            posting_lists = None
-            term_stats, block_max = term_artifacts(
-                pool, postings_dir, build_term_stats, build_block_max
-            )
+                stage="block_max", inputs=[list_dir], force=force,
+            ),
+        )
+        term_stats, block_max = f_ts.result(), f_bm.result()
         params = f_params.result()
     phase_sec["parallel_group"] = round(time.time() - t_group0, 2)
 
@@ -694,7 +644,7 @@ _LIST_SCHEMA = StructType(
         StructField("df", LongType(), False),
         StructField("payload", BinaryType(), False),
         # term_stats / block_max by-products of the merge (see
-        # _build_compressed_lists): the merge decodes every
+        # _build_posting_lists): the merge decodes every
         # term's full (doc_id, tf, impact) arrays anyway, so these are
         # O(1) extra numpy reductions per term.  Readers of the
         # compressed lists select (term, df, payload) and never pay for
@@ -753,11 +703,12 @@ def _run_grouped(batches, key_cols: list[str], flush):
 
 
 def _derive_term_stats(posting_lists: DataFrame, n_buckets: int) -> DataFrame:
-    """term_stats from the fused posting-list checkpoint — value- and
-    schema-identical to the standalone postings scan (term_bucket is a
-    pure function of the term; the int cast matches the partition-dir
-    type inference of the postings read-back).  Column pruning keeps the
-    payload bytes unread."""
+    """term_stats from the fused posting-list checkpoint.  term_bucket is
+    a pure function of the term; the int cast matches the partition-dir
+    type inference of the postings read-back.  Column pruning keeps the
+    payload bytes unread.  ``test_term_artifacts_equal_pandas_reference_zipf``
+    pins values and schema against a pandas reduction of the postings
+    rows."""
     return posting_lists.select(
         "term",
         F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("term_bucket"),
@@ -780,8 +731,8 @@ def _derive_block_max(posting_lists: DataFrame) -> DataFrame:
     )
 
 
-def _build_compressed_lists(
-    spark: SparkSession, postings: DataFrame, path: str, cfg: IndexConfig, force: bool
+def _build_posting_lists(
+    spark: SparkSession, postings: DataFrame, path: str, force: bool
 ) -> DataFrame:
     """Compressed posting-list construction (north rule).
 
@@ -877,11 +828,9 @@ def _build_compressed_lists(
         # Merge + stats in one pass: identical bytes to
         # merge_posting_lists (same decode → stable argsort → encode),
         # plus the term_stats / block_max columns computed from the
-        # arrays the merge has already decoded — the reason the build
-        # no longer re-scans the postings checkpoint for those stages.
+        # arrays the merge has already decoded, so neither stage scans
+        # the postings checkpoint.
         import numpy as np
-
-        prefix_len, block_size = cfg.prefix_len, cfg.block_size
 
         def flush(g: dict) -> dict:
             # every partial holds >= 1 posting, so n >= 1 below
@@ -893,12 +842,11 @@ def _build_compressed_lists(
             doc_ids, tfs, impacts = doc_ids[order], tfs[order], impacts[order]
             n = len(doc_ids)
             payload = encode_posting_list(doc_ids, tfs, impacts)
-            # prefix_cutoff = the B-th largest impact (min over the
-            # row_number()<=B window of the standalone builder; ties at
-            # the boundary share the same value, so sorting by impact
-            # alone is exact)
+            # prefix_cutoff = the B-th largest impact (ties at the
+            # boundary share the same value, so sorting by impact alone
+            # is exact)
             imp_desc = np.sort(impacts)[::-1]
-            bids = doc_ids // block_size
+            bids = doc_ids // BLOCK_SIZE
             starts = np.nonzero(np.r_[True, bids[1:] != bids[:-1]])[0]
             return {
                 "term": g["term"][0],
@@ -906,7 +854,7 @@ def _build_compressed_lists(
                 "payload": payload,
                 "max_impact": float(imp_desc[0]),
                 "min_impact": float(imp_desc[-1]),
-                "prefix_cutoff": float(imp_desc[min(prefix_len, n) - 1]),
+                "prefix_cutoff": float(imp_desc[min(PREFIX_LEN, n) - 1]),
                 "block_ids": bids[starts],
                 "block_maxes": np.maximum.reduceat(impacts, starts),
             }
@@ -981,8 +929,8 @@ def _estimate_params(
     if cfg.alpha is not None and cfg.beta is not None and not isinstance(cfg.base_rate, str):
         return TransformParams(alpha=cfg.alpha, beta=cfg.beta, base_rate=cfg.base_rate)
 
-    rng = np.random.default_rng(cfg.pseudo_query_seed)
-    sample_ids = [int(i) for i in rng.choice(n_docs, size=min(n_docs, cfg.pseudo_query_sample), replace=False)]
+    rng = np.random.default_rng(PSEUDO_QUERY_SEED)
+    sample_ids = [int(i) for i in rng.choice(n_docs, size=min(n_docs, PSEUDO_QUERY_SAMPLE), replace=False)]
     sampled = (
         docs.where(F.col("doc_id").isin(sample_ids))
         .select("doc_id", F.slice("tokens", 1, 5).alias("terms"))
@@ -1148,7 +1096,6 @@ def load_index(spark: SparkSession, path: str) -> BM25Index:
     with open(os.path.join(path, "corpus_stats.json")) as f:
         stats = json.load(f)
     cfg = IndexConfig.from_dict(meta["config"])
-    pl_dir = os.path.join(path, "posting_lists")
     docs = spark.read.parquet(os.path.join(path, "docs"))
     return BM25Index(
         spark=spark,
@@ -1161,5 +1108,5 @@ def load_index(spark: SparkSession, path: str) -> BM25Index:
         n_docs=stats["n_docs"],
         avgdl=stats["avgdl"],
         params=TransformParams.from_dict(meta["params"]),
-        posting_lists=spark.read.parquet(pl_dir) if ckpt.is_complete(pl_dir) else None,
+        posting_lists=spark.read.parquet(os.path.join(path, "posting_lists")),
     )

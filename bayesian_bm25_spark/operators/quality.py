@@ -66,7 +66,7 @@ def evaluate_fusion_matrix(
         spark,
         ds.pages,
         os.path.join(work_dir, "quality_idx"),
-        IndexConfig(base_rate="auto", build_compressed=False),
+        IndexConfig(base_rate="auto"),
     )
 
     scored = Q.score_queries(idx.postings, ds.queries)
@@ -1012,7 +1012,7 @@ def evaluate_calibration_by_base_rate(
         spark,
         ds.pages,
         os.path.join(work_dir, "calib_idx"),
-        IndexConfig(base_rate="auto", build_compressed=False),
+        IndexConfig(base_rate="auto"),
     )
 
     scored = Q.score_queries(idx.postings, ds.queries)

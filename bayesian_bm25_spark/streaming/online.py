@@ -164,7 +164,8 @@ def start_streaming_ingest(
         else:
             state["index"] = add_documents(state["index"], batch, path)
         state["version"] = version + 1
-        state["rows"] += batch.count()
+        # n_docs is on the handle (corpus_stats.json): no count job
+        state["rows"] = state["index"].n_docs
         if on_batch is not None:
             on_batch(batch_id, state["index"])
 

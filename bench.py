@@ -170,7 +170,7 @@ def main() -> None:
                 spark,
                 pages,
                 idx_dir,
-                IndexConfig(base_rate="auto", build_compressed=True),
+                IndexConfig(base_rate="auto"),
                 force=True,
             )
             build_walls.append(time.time() - t0)

@@ -90,7 +90,7 @@ def run_build(spark, n_docs, repeat):
             t0 = time.time()
             idx = build_index(
                 spark, pages, idx_dir,
-                IndexConfig(base_rate="auto", build_compressed=True), force=True,
+                IndexConfig(base_rate="auto"), force=True,
             )
             walls.append(round(time.time() - t0, 4))
             phases.append(idx.build_metrics.get("phase_sec", {}))
@@ -121,7 +121,7 @@ def run_query(spark, n_docs, n_queries):
         pages = spark.read.parquet(pages_dir)
         idx = build_index(
             spark, pages, idx_dir,
-            IndexConfig(base_rate="auto", build_compressed=True), force=True,
+            IndexConfig(base_rate="auto"), force=True,
         )
         spark.catalog.clearCache()
         qdf = queries_to_df(spark, generate_queries(n_docs, seed=42, n_queries=n_queries))

@@ -65,7 +65,7 @@ class TestPorterStemmer:
         )
         idx = build_index(
             spark, pages, str(tmp_path / "stem_idx"),
-            IndexConfig(stemmer="porter", alpha=1.0, beta=1.0, build_compressed=False),
+            IndexConfig(stemmer="porter", alpha=1.0, beta=1.0),
         )
         terms = {r["term"] for r in idx.postings.select("term").distinct().collect()}
         assert "cat" in terms and "run" in terms and "cats" not in terms
@@ -132,7 +132,7 @@ class TestStopwords:
         eng = BayesianBM25Scorer(
             spark, index_path=str(tmp_path / "sw_idx"),
             stemmer="porter2", stopwords="english",
-            alpha=1.0, beta=1.0, build_compressed=False,
+            alpha=1.0, beta=1.0,
         )
         eng.index(pages)
         lens = {
@@ -204,7 +204,7 @@ class TestBeirLoader:
 
         idx = build_index(
             spark, ds.pages, str(tmp_path / "beir_idx"),
-            IndexConfig(alpha=1.0, beta=1.0, build_compressed=False),
+            IndexConfig(alpha=1.0, beta=1.0),
         )
         ranking = Q.retrieve(idx.postings, ds.queries, idx.params, idx.avgdl, k=4)
         per_q = {r["query_id"]: r["ndcg"] for r in ndcg_at_k(ranking, ds.qrels, k=4).collect()}
@@ -239,7 +239,7 @@ class TestMultiFieldAppend:
         )
         idx = MFO.build_multi_field_index(
             spark, docs, ["title", "body"], str(tmp_path / "mf1"),
-            config=IndexConfig(alpha=1.0, beta=1.0, build_compressed=False),
+            config=IndexConfig(alpha=1.0, beta=1.0),
         )
         more = spark.createDataFrame(
             [(2, "gardening tips", "basil and thyme care")],
@@ -265,7 +265,6 @@ class TestMultiFieldAppend:
         s = MultiFieldScorer(
             ["title", "body"], spark=spark,
             index_path=str(tmp_path / "mfs"), alpha=1.0, beta=1.0,
-            build_compressed=False,
         )
         s.index([
             {"title": ["cats"], "body": ["cats", "purr"]},
@@ -368,7 +367,7 @@ def six_traced(spark, tmp_path_factory):
     )
     idx = build_index(
         spark, pages, str(tmp_path_factory.mktemp("idx_trace")),
-        IndexConfig(base_rate="auto", build_compressed=False),
+        IndexConfig(base_rate="auto"),
     )
     qdf = queries_to_df(spark, [["cat"]])
     scored = Q.with_probability(
@@ -505,7 +504,7 @@ class TestPorter2:
         )
         idx = build_index(
             spark, pages, str(tmp_path / "p2_idx"),
-            IndexConfig(stemmer="porter2", alpha=1.0, beta=1.0, build_compressed=False),
+            IndexConfig(stemmer="porter2", alpha=1.0, beta=1.0),
         )
         terms = {r["term"] for r in idx.postings.select("term").distinct().collect()}
         assert {"cat", "die", "generous", "news", "lie", "sky"} <= terms

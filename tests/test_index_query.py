@@ -19,7 +19,12 @@ from bayesian_bm25_spark.kernel.bm25 import (
 )
 from bayesian_bm25_spark.kernel.transform import TransformParams
 from bayesian_bm25_spark.operators import query as Q
-from bayesian_bm25_spark.operators.index_build import IndexConfig, build_index, load_index
+from bayesian_bm25_spark.operators.index_build import (
+    BLOCK_SIZE,
+    IndexConfig,
+    build_index,
+    load_index,
+)
 from bayesian_bm25_spark.sources.webcorpus import (
     generate_pages,
     generate_queries,
@@ -114,26 +119,44 @@ class TestBuild:
         assert len(flat) > 10 * 10_000
         assert max(df for df, _ in got.values()) > idx.n_docs // 2
 
-    def test_fused_term_artifacts_equal_standalone_zipf(
-        self, spark, tmp_path, zipf3k_pages, zipf3k_index
-    ):
-        """term_stats / block_max derived from the posting-list merge
-        (build_compressed=True) must be value- AND schema-identical to
-        the standalone postings scans of build_compressed=False."""
-        a = zipf3k_index
-        b = build_index(
-            spark, zipf3k_pages, str(tmp_path / "standalone"),
-            IndexConfig(build_compressed=False, **ZIPF3K_CFG),
+    def test_term_artifacts_equal_pandas_reference_zipf(self, zipf3k_index):
+        """term_stats / block_max (derived from the posting-list merge)
+        equal a pandas reduction of the index's own postings rows, with
+        the reference's block size and θ-pass prefix depth of 128:
+        df, term_bucket, max/min impact, prefix_cutoff = the
+        min(128, df)-th largest impact, and per (term, doc_id // 128)
+        block maxima.  Both schemas are pinned."""
+        from bayesian_bm25_spark.functions.xxhash import term_bucket
+
+        idx = zipf3k_index
+        flat = idx.postings.select("term", "doc_id", "impact").toPandas()
+        expect_stats = []
+        for term, g in flat.groupby("term"):
+            imp = np.sort(g["impact"].to_numpy())[::-1]
+            expect_stats.append((
+                term, term_bucket(term, idx.config.n_buckets), len(imp),
+                float(imp[0]), float(imp[-1]), float(imp[min(128, len(imp)) - 1]),
+            ))
+        blocks = (
+            flat.assign(block_id=flat["doc_id"] // 128)
+            .groupby(["term", "block_id"])["impact"].max()
         )
-        assert b.posting_lists is None
-        assert a.term_stats.schema == b.term_stats.schema
-        assert sorted(map(tuple, a.term_stats.collect())) == sorted(
-            map(tuple, b.term_stats.collect())
-        )
-        assert a.block_max.schema == b.block_max.schema
-        assert sorted(map(tuple, a.block_max.collect())) == sorted(
-            map(tuple, b.block_max.collect())
-        )
+        expect_blocks = [(t, int(b), float(m)) for (t, b), m in blocks.items()]
+
+        assert [(f.name, f.dataType.simpleString()) for f in idx.term_stats.schema] == [
+            ("term", "string"), ("term_bucket", "int"), ("df", "bigint"),
+            ("max_impact", "double"), ("min_impact", "double"),
+            ("prefix_cutoff", "double"),
+        ]
+        assert sorted(map(tuple, idx.term_stats.collect())) == sorted(expect_stats)
+        assert [(f.name, f.dataType.simpleString()) for f in idx.block_max.schema] == [
+            ("term", "string"), ("block_id", "bigint"), ("block_max_impact", "double"),
+        ]
+        assert sorted(map(tuple, idx.block_max.collect())) == sorted(expect_blocks)
+        # the prefix depth and the block size both bite: head terms hold
+        # more than 128 postings, and docs span many blocks
+        assert max(df for _, _, df, *_ in expect_stats) > 128
+        assert flat["doc_id"].max() // 128 > 10
 
     def test_distributed_params_equal_collected_zipf(
         self, spark, zipf3k_index, monkeypatch
@@ -244,12 +267,14 @@ class TestBuild:
     def test_config_from_dict_drops_removed_fields(self):
         """load_index reads the config through from_dict, so params.json
         of an index built when IndexConfig had more fields still opens."""
-        old = {
-            **IndexConfig(k1=2.0).to_dict(),
-            "n_salts": 8, "mapside_partials": True, "checkpoint_segments": False,
-            "fused_term_artifacts": True, "local_tf": True, "broadcast_vocab_max": 0,
-        }
-        assert IndexConfig.from_dict(old) == IndexConfig(k1=2.0)
+        for removed in (
+            {"n_salts": 8, "mapside_partials": True, "checkpoint_segments": False,
+             "fused_term_artifacts": True, "local_tf": True, "broadcast_vocab_max": 0},
+            {"block_size": 128, "prefix_len": 128, "build_compressed": True,
+             "pseudo_query_seed": 42, "pseudo_query_sample": 50},
+        ):
+            old = {**IndexConfig(k1=2.0).to_dict(), **removed}
+            assert IndexConfig.from_dict(old) == IndexConfig(k1=2.0)
 
     @pytest.mark.parametrize("distributed", [False, True])
     def test_user_base_rate_survives_empty_sample(
@@ -414,9 +439,9 @@ class TestZipfCorpus:
 
     def test_block_max_per_block_dominance(self, zipf):
         idx, _, _ = zipf
-        # blocks are doc-index ranges: block_id = doc_id // block_size
+        # blocks are doc-index ranges: block_id = doc_id // BLOCK_SIZE
         with_block = idx.postings.withColumn(
-            "block_id", (F.col("doc_id") / idx.config.block_size).cast("long")
+            "block_id", (F.col("doc_id") / BLOCK_SIZE).cast("long")
         )
         viol = (
             with_block.join(idx.block_max, ["term", "block_id"])
@@ -489,7 +514,7 @@ class TestMaxScore:
         path = str(tmp_path_factory.mktemp("idx_zipf_ms"))
         pages = generate_pages(spark, 1000, seed=42, num_partitions=8)
         return build_index(
-            spark, pages, path, IndexConfig(base_rate="auto", build_compressed=False)
+            spark, pages, path, IndexConfig(base_rate="auto")
         )
 
     def test_zipf_identical_and_prunes(self, zipf_idx):
@@ -744,8 +769,7 @@ class TestRobertsonPrunedPaths:
         path = str(tmp_path_factory.mktemp("idx_rob"))
         return build_index(
             spark, pages, path,
-            IndexConfig(method="robertson", base_rate=0.05, alpha=1.0, beta=1.0,
-                        build_compressed=False),
+            IndexConfig(method="robertson", base_rate=0.05, alpha=1.0, beta=1.0),
         )
 
     def test_min_impact_is_negative(self, rob_index):

@@ -8,8 +8,6 @@ property that makes the operator survive a 100× scale-up:
   hash-partitioned by doc_id first; HashPartitioning on a subset of the
   grouping keys satisfies the agg's distribution requirement)
 - the postings scan is partition-pruned to query-term buckets
-- the θ-pass cutoff build compiles to WindowGroupLimit (map-side top-B,
-  no Zipf-head sort in one task)
 - the query side of the scoring join is a broadcast, never a shuffle
 - Column-math operators (hyperplane buckets, language id, quality)
   contain NO Python eval nodes — whole-stage codegen end to end
@@ -18,7 +16,6 @@ property that makes the operator survive a 100× scale-up:
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from bayesian_bm25_spark.operators import query as Q
 from bayesian_bm25_spark.operators.index_build import IndexConfig, build_index
@@ -34,7 +31,7 @@ def plan_idx(spark, tmp_path_factory):
     pages = generate_pages(spark, 2000, seed=11, num_partitions=8)
     return build_index(
         spark, pages, str(tmp_path_factory.mktemp("idx_plans")),
-        IndexConfig(alpha=1.0, beta=1.0, base_rate=0.05, build_compressed=False),
+        IndexConfig(alpha=1.0, beta=1.0, base_rate=0.05),
     )
 
 
@@ -240,20 +237,6 @@ class TestFacadeBatchPlan:
         ids, _ = scorer.retrieve(queries[10:], k=10)
         assert (ids >= 0).any()
         assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
-
-
-class TestBuildPlan:
-    def test_theta_cutoff_uses_window_group_limit(self, plan_idx):
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("term").orderBy(F.desc("impact"), F.asc("doc_id"))
-        cutoff = (
-            plan_idx.postings.withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= 128)
-            .groupBy("term")
-            .agg(F.min("impact").alias("prefix_cutoff"))
-        )
-        assert "WindowGroupLimit" in plan_of(cutoff)
 
 
 class TestCodegenOnlyOperators:

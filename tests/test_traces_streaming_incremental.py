@@ -208,8 +208,7 @@ class TestIncremental:
         must equal a fresh build of all six pages with the same ids.
         Stopwords in the config exercise the append-side tokenizer
         parity."""
-        cfg = IndexConfig(base_rate="auto", build_compressed=True,
-                          stopwords="english")
+        cfg = IndexConfig(base_rate="auto", stopwords="english")
         rows = [(i, f"https://example.org/doc/{i}", t, "en")
                 for i, t in enumerate(SIX_DOCS)]
         schema = "doc_id long, url string, text string, lang string"
