@@ -18,8 +18,10 @@ the build resumes from any boundary — north rule):
          └─ term_stats: column-pruned select of posting_lists (payload
                     bytes unread)
          └─ block_max:  explode of the posting_lists block arrays (same)
-      └─ params.json: seeded pseudo-query sampling → α/β/base-rate on
-                    the driver (numpy-exact, mirrors reference protocol)
+      └─ params.json: seeded pseudo-query sampling → one pruned Arrow
+                    fetch of their terms' postings rows → numpy scoring
+                    and α/β/base-rate on the driver (mirrors the
+                    reference protocol and the numpy kernel)
 
 Skew: the Zipf head ("the"-like terms) is handled twice — the flat
 postings shuffle relies on AQE skew-join splitting, and the compressed
@@ -36,7 +38,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -568,10 +570,10 @@ def _build_index_impl(
         return out
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        # params first: its chain (score 50 pseudo-queries → cache →
-        # several small percentile/agg jobs) has the longest tail of
-        # sequential driver round-trips, so giving it first claim on the
-        # FIFO scheduler lets that tail overlap the bulk stages
+        # params first: its two small jobs (the sample collect, then the
+        # pruned Arrow fetch of the pseudo-query terms' rows) and the
+        # driver-side numpy scoring overlap the bulk stages when they
+        # claim the FIFO scheduler first
         f_params = pool.submit(
             timed, "params",
             lambda: _estimate_params(spark, docs, postings, cfg, n_docs),
@@ -889,12 +891,6 @@ def _build_posting_lists(
     return pl
 
 
-# Below this many docs, params come from ONE Arrow collect of the
-# pseudo-query score sample; at and above it, from the distributed
-# median/std/percentile jobs (the sample grows with n_docs).
-_PARAMS_COLLECT_MAX = 500_000
-
-
 def _params_from_scores(
     per_query_scores: list, cfg: IndexConfig, n_docs: int
 ) -> TransformParams:
@@ -915,19 +911,41 @@ def _estimate_params(
     spark: SparkSession, docs: DataFrame, postings: DataFrame, cfg: IndexConfig, n_docs: int
 ) -> TransformParams:
     """Seeded pseudo-query sampling → α/β/base-rate, mirroring the
-    reference protocol exactly (reference scorer.py:287-337).
-
-    The RNG runs on the driver over the ordered doc_id range
-    (``default_rng(seed).choice(n, 50, replace=False)``); the 50 pseudo
-    queries are scored in ONE distributed batch; the nonzero score arrays
-    come back to the driver for exact median/std/percentile math.
-    """
-    import numpy as np
-
-    from bayesian_bm25_spark.operators import query as Q
-
+    reference protocol exactly (reference scorer.py:287-337)."""
     if cfg.alpha is not None and cfg.beta is not None and not isinstance(cfg.base_rate, str):
         return TransformParams(alpha=cfg.alpha, beta=cfg.beta, base_rate=cfg.base_rate)
+    scores = _sample_pseudo_query_scores(docs, postings, cfg.n_buckets, n_docs)
+    return _params_from_scores(scores, cfg, n_docs)
+
+
+def _sample_pseudo_query_scores(
+    docs: DataFrame, postings: DataFrame, n_buckets: int, n_docs: int
+) -> list:
+    """The index's twin of the kernel's ``sample_pseudo_query_scores``:
+    per-query nonzero score arrays, equal value for value to the
+    kernel's scoring of the same impacts.
+
+    The RNG runs on the driver over the ordered doc_id range
+    (``default_rng(seed).choice(n, 50, replace=False)``); each sampled
+    doc's first 5 tokens form a query.  The postings rows of their terms
+    come back in ONE bucket-pruned Arrow fetch (no join, no ``groupBy``,
+    no exchange), and each query is scored in numpy the way
+    ``BM25Oracle.get_scores`` does: its tokens in order, a duplicate
+    token once per occurrence, each doc's impacts summed in token order,
+    then ``score > 0`` in doc_id order.
+
+    Driver bound: the fetch holds Σ df of at most 250 terms, about 20
+    rows per doc on Zipf pages (25,940 rows at 1k docs, 406,361 at 20k,
+    5.8M at 300k) — fewer, at every size, than the nonzero (query, doc)
+    scores themselves (12.4M at 300k).  There is no size switch: a
+    corpus past what a driver holds needs this scoring moved into a
+    per-doc-range ``mapInPandas`` that returns only nonzero scores.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from bayesian_bm25_spark.operators import query as Q
 
     rng = np.random.default_rng(PSEUDO_QUERY_SEED)
     sample_ids = [int(i) for i in rng.choice(n_docs, size=min(n_docs, PSEUDO_QUERY_SAMPLE), replace=False)]
@@ -937,109 +955,34 @@ def _estimate_params(
         .collect()
     )
     tokens_by_id = {int(r["doc_id"]): list(r["terms"]) for r in sampled}
-    # sample order: query ids 0..n-1 follow it, so per_query_scores below
-    # keeps the reference's query order
+    # sample order is the reference's query order
     queries = [tokens_by_id[did] for did in sample_ids if tokens_by_id.get(did)]
     if not queries:
-        return _params_from_scores([], cfg, n_docs)
-    qdf = Q.local_query_terms(spark, queries)
-    # co_partition=False is deliberate: the default query plan repartitions
-    # the WHOLE postings table by doc_id before the broadcast join — right
-    # for large query batches (moves |postings| once instead of the joined
-    # blow-up), wrong here where only ~250 pseudo-query terms match.  A
-    # plain broadcast join touches just the matched rows, so the params
-    # phase costs O(Σ df over query terms) instead of a full-corpus
-    # shuffle — this was the critical-path phase of the entire build at
-    # 1M docs (183s of a 183s parallel-group wall).
-    scored = Q.score_queries(
-        postings, qdf, n_buckets=cfg.n_buckets, co_partition=False,
-        driver_terms=sorted({t for ts in queries for t in ts}),
-        # α/β/base-rate read only the score column — skip the
-        # tf_match/doc_len aggregates (identical scores, ~40% less agg
-        # state; params is the 1M build's critical-path phase)
-        score_only=True,
-    ).where(F.col("score") > 0)
-
-    if n_docs < _PARAMS_COLLECT_MAX or (
-        cfg.base_rate == "auto" and cfg.base_rate_method != "percentile"
-    ):
-        # ONE Arrow collect of the (query_id, score) sample, then the
-        # kernel estimators on the driver.  Small corpora: replaces the
-        # distributed chain's ~5 sequential jobs (cache materialize +
-        # stddev agg + 3-job exact percentile + window base-rate), each
-        # of which queued behind the bulk stages' tasks inside the
-        # build's parallel group (~2-3× the standalone params wall in
-        # scheduling latency alone).  mixture/elbow: those estimators
-        # are whole-sample iterative at any size.  The sample is bounded
-        # by the 50 pseudo-queries' nonzero scores.
-        pdf = scored.select("query_id", "score").toPandas()
-        per_query_scores = [
-            g.to_numpy(dtype=np.float64)
-            for _, g in pdf.groupby("query_id", sort=True)["score"]
-        ]
-        return _params_from_scores(per_query_scores, cfg, n_docs)
-
-    # fully distributed path: β = exact median, α = 1/std_pop of the
-    # pooled nonzero sample; base-rate = mean over queries of
-    # frac(scores ≥ per-query exact 95th pct)/n_docs.  Spark's exact
-    # ``percentile`` uses the same linear interpolation as numpy, so
-    # the values equal the reference's driver math — without ever
-    # collecting the O(n_docs)-sized score sample.
-    from bayesian_bm25_spark.operators.stats import exact_percentile
-
-    scored = scored.cache()
-    try:
-        # job 1 materializes the cache; the exact-median chain and
-        # the base-rate chain then read ONLY cached blocks and are
-        # independent — run them concurrently so their per-job fixed
-        # costs overlap (params is the longest member of the build's
-        # parallel group; every serial job here is on the critical
-        # path)
-        row = scored.agg(
-            F.stddev_pop("score").alias("std"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        if int(row["n"]) == 0:
-            return _params_from_scores([], cfg, n_docs)
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        def _base_rate() -> float | None:
-            if cfg.base_rate == "auto":
-                # per-query p95 as a WINDOW aggregate: one shuffle
-                # by query_id, then the filter, per-query ratio and
-                # global mean all run map-side on that partitioning
-                # (the old groupBy + self-join shuffled the scored
-                # frame by query_id twice)
-                wq = Window.partitionBy("query_id")
-                ratios = (
-                    scored.withColumn(
-                        "thr", F.expr("percentile(score, 0.95)").over(wq)
-                    )
-                    .where(F.col("score") >= F.col("thr"))
-                    .groupBy("query_id")
-                    .agg((F.count(F.lit(1)) / F.lit(float(n_docs))).alias("ratio"))
-                )
-                return float(
-                    np.clip(float(ratios.agg(F.avg("ratio")).collect()[0][0]), 1e-6, 0.5)
-                )
-            if isinstance(cfg.base_rate, (int, float)):
-                return float(cfg.base_rate)
-            return None
-
-        with _TPE(max_workers=2) as pool:
-            f_med = pool.submit(
-                exact_percentile, scored, "score", 0.5, n=int(row["n"])
-            )
-            f_br = pool.submit(_base_rate)
-            est_beta = f_med.result()
-            base_rate = f_br.result()
-        std = float(row["std"])
-        est_alpha = 1.0 / std if std > 0 else 1.0
-        alpha = cfg.alpha if cfg.alpha is not None else est_alpha
-        beta = cfg.beta if cfg.beta is not None else est_beta
-        return TransformParams(alpha=alpha, beta=beta, base_rate=base_rate)
-    finally:
-        scored.unpersist()
+        return []
+    terms = sorted({t for ts in queries for t in ts})
+    rows = (
+        Q.prune_query_terms_buckets(postings, None, n_buckets, terms)
+        .where(F.col("term").isin(terms))
+        .select("term", "doc_id", "impact")
+        .toArrow()
+    )
+    # each term's row positions: one stable sort of the term codes
+    code = pc.index_in(rows["term"], value_set=pa.array(terms)).to_numpy()
+    order = np.argsort(code, kind="stable")
+    bounds = np.searchsorted(code[order], np.arange(len(terms) + 1))
+    term_rows = {t: order[bounds[i]:bounds[i + 1]] for i, t in enumerate(terms)}
+    doc_ids = rows["doc_id"].to_numpy()
+    impacts = rows["impact"].to_numpy()
+    out = []
+    for q in queries:
+        sel = np.concatenate([term_rows[t] for t in q])
+        # bincount adds in input order, so each doc sums in token order
+        _, inv = np.unique(doc_ids[sel], return_inverse=True)
+        scores = np.bincount(inv, weights=impacts[sel])
+        scores = scores[scores > 0]
+        if len(scores):
+            out.append(scores)
+    return out
 
 
 def add_documents(
@@ -1090,23 +1033,34 @@ def add_documents(
 
 
 def load_index(spark: SparkSession, path: str) -> BM25Index:
-    """Re-open a built index from its checkpoints (no recompute)."""
+    """Re-open a built index from its checkpoints (no recompute).
+
+    Raises ``ValueError`` naming the first stage without a complete
+    checkpoint (``ckpt.is_complete``); rebuild with
+    ``build_index(..., force=True)``."""
+    stages = {}
+    for stage in ("docs", "postings", "posting_lists", "term_stats", "block_max"):
+        stage_dir = os.path.join(path, stage)
+        if not ckpt.is_complete(stage_dir):
+            raise ValueError(
+                f"{stage_dir}: the index has no complete {stage} checkpoint; "
+                "rebuild it with build_index(..., force=True)"
+            )
+        stages[stage] = spark.read.parquet(stage_dir)
     with open(os.path.join(path, "params.json")) as f:
         meta = json.load(f)
     with open(os.path.join(path, "corpus_stats.json")) as f:
         stats = json.load(f)
-    cfg = IndexConfig.from_dict(meta["config"])
-    docs = spark.read.parquet(os.path.join(path, "docs"))
     return BM25Index(
         spark=spark,
         path=path,
-        config=cfg,
-        postings=spark.read.parquet(os.path.join(path, "postings")),
-        term_stats=spark.read.parquet(os.path.join(path, "term_stats")),
-        block_max=spark.read.parquet(os.path.join(path, "block_max")),
-        doc_stats=docs.select("doc_id", "url", "doc_len"),
+        config=IndexConfig.from_dict(meta["config"]),
+        postings=stages["postings"],
+        term_stats=stages["term_stats"],
+        block_max=stages["block_max"],
+        doc_stats=stages["docs"].select("doc_id", "url", "doc_len"),
         n_docs=stats["n_docs"],
         avgdl=stats["avgdl"],
         params=TransformParams.from_dict(meta["params"]),
-        posting_lists=spark.read.parquet(os.path.join(path, "posting_lists")),
+        posting_lists=stages["posting_lists"],
     )

@@ -179,16 +179,16 @@ def prepartition_for_scoring(
     return out
 
 
-def _scoring_columns(src: DataFrame, cols: list[str]) -> DataFrame:
-    """``src`` narrowed to ``cols`` (tf/df/term_bucket would otherwise
+def _scoring_columns(src: DataFrame) -> DataFrame:
+    """``src`` narrowed to ``_SCORE_COLS`` (tf/df/term_bucket would otherwise
     ride the doc_id exchange and widen every join probe row).
     Projection preserves partitioning, so a prepartition_for_scoring
     frame keeps its exchange-free layout; it already has exactly these
     columns and is returned as is."""
     have = src.columns
-    if have == cols or not set(cols) <= set(have):
+    if have == _SCORE_COLS or not set(_SCORE_COLS) <= set(have):
         return src
-    return src.select(*cols)
+    return src.select(*_SCORE_COLS)
 
 
 def score_queries(
@@ -198,14 +198,8 @@ def score_queries(
     n_buckets: int | None = None,
     co_partition: bool = True,
     driver_terms: list[str] | None = None,
-    score_only: bool = False,
 ) -> DataFrame:
     """(query_id, doc_id, score, tf_match, doc_len) for every matching doc.
-
-    ``score_only=True`` drops the tf_match / doc_len aggregates (callers
-    that never read them — parameter estimation needs only the score
-    column): ~40% less per-group aggregation state and narrower partial
-    rows through the agg exchange.  The score values are identical.
 
     Inner-join semantics: docs with score 0 never appear (the reference's
     ``scores > 0`` active mask falls out of the join for free,
@@ -228,11 +222,11 @@ def score_queries(
         src = prune_query_terms_buckets(postings, qt, n_buckets, driver_terms)
     # project BEFORE the exchange / join probe; the in-memory columnar
     # cache of a persisted frame prunes to the selected columns too
-    src = _scoring_columns(src, _SCORE_COLS[:3] if score_only else _SCORE_COLS)
+    src = _scoring_columns(src)
     if co_partition:
         p = postings.sparkSession.sparkContext.defaultParallelism * 2
         src = src.repartition(p, "doc_id")
-    keys, aggs = _score_aggregation(score_only)
+    keys, aggs = _score_aggregation()
     return src.join(F.broadcast(qt), "term").groupBy(*keys).agg(*aggs)
 
 
@@ -262,14 +256,10 @@ _probability_col = functools.lru_cache(maxsize=64, typed=True)(_probability_expr
 
 
 @functools.lru_cache(maxsize=None)
-def _score_aggregation(score_only: bool) -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+def _score_aggregation() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
     """(group keys, aggregates) of the (query_id, doc_id) scoring agg."""
-    keys = (F.col("query_id"), F.col("doc_id"))
-    score = F.sum(F.col("impact") * F.col("qtf")).alias("score")
-    if score_only:
-        return keys, (score,)
-    return keys, (
-        score,
+    return (F.col("query_id"), F.col("doc_id")), (
+        F.sum(F.col("impact") * F.col("qtf")).alias("score"),
         F.count(F.lit(1)).alias("tf_match"),
         F.first("doc_len").alias("doc_len"),
     )
@@ -447,7 +437,7 @@ def retrieve_maxscore(
         src = prune_query_terms_buckets(postings, qt, n_buckets, driver_terms)
     # narrow to the scoring columns before every downstream pass /
     # exchange — same projection score_queries applies
-    src = _scoring_columns(src, _SCORE_COLS)
+    src = _scoring_columns(src)
 
     # -- A: θ from impact-ordered prefixes ---------------------------------
     # restrict term_stats to the query batch FIRST (broadcast the tiny
@@ -510,7 +500,7 @@ def retrieve_maxscore(
     cand_p = candidates.repartition(p, "doc_id")
     joined = src_p.join(F.broadcast(qt), "term")
     exact = joined.join(cand_p.hint("shuffle_hash"), ["query_id", "doc_id"])
-    keys, aggs = _score_aggregation(False)
+    keys, aggs = _score_aggregation()
     scored = exact.groupBy(*keys).agg(*aggs)
     ranked = topk(scored, k=k)
     return with_probability(ranked, params, avgdl).select(*_result_columns())

@@ -26,7 +26,12 @@ def manifest_path(stage_dir: str) -> str:
 
 
 def is_complete(stage_dir: str) -> bool:
-    return os.path.exists(manifest_path(stage_dir))
+    """The stage has its manifest AND at least one parquet file: a
+    manifest over a directory whose data is gone makes the stage
+    rebuild, instead of failing to infer a schema on read."""
+    return os.path.exists(manifest_path(stage_dir)) and any(
+        fn.endswith(".parquet") for _root, _dirs, files in os.walk(stage_dir) for fn in files
+    )
 
 
 def read_manifest(stage_dir: str) -> dict:

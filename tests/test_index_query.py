@@ -6,6 +6,9 @@ scores within rtol 1e-9, calibrated probabilities within rtol 1e-9.
 
 from __future__ import annotations
 
+import copy
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -158,23 +161,66 @@ class TestBuild:
         assert max(df for _, _, df, *_ in expect_stats) > 128
         assert flat["doc_id"].max() // 128 > 10
 
-    def test_distributed_params_equal_collected_zipf(
-        self, spark, zipf3k_index, monkeypatch
-    ):
-        """Above _PARAMS_COLLECT_MAX docs, α/β/base-rate come from the
-        distributed median/std/percentile jobs; they must equal the
-        one-collect driver math."""
+    def test_params_equal_kernel_oracle_zipf(self, spark, zipf3k_index):
+        """α/β/base-rate of the Spark index equal the numpy kernel's
+        (sample_pseudo_query_scores over a BM25Oracle of the same pages)
+        exactly, for every base-rate method.  The pseudo-query score
+        arrays equal the kernel's run over the index's own impacts (a
+        Spark impact may differ from the kernel's in its last ULP): each
+        doc sums its impacts in token order."""
+        from dataclasses import replace
+
         from bayesian_bm25_spark.operators import index_build as IB
 
+        corpus = [tokenize(r["text"]) for r in generate_rows_local(3000, seed=11)]
+        oracle = BM25Oracle()
+        oracle.index(corpus)
+        pq = sample_pseudo_query_scores(oracle, corpus)
         idx = zipf3k_index
+        flat = idx.postings.select("term", "doc_id", "impact").toPandas()
+        oracle._impacts = {
+            t: dict(zip(g["doc_id"].tolist(), g["impact"].tolist()))
+            for t, g in flat.groupby("term")
+        }
         docs = spark.read.parquet(f"{idx.path}/docs")
-        cfg = IndexConfig(base_rate="auto")
-        collected = IB._estimate_params(spark, docs, idx.postings, cfg, idx.n_docs)
-        monkeypatch.setattr(IB, "_PARAMS_COLLECT_MAX", 0)
-        distributed = IB._estimate_params(spark, docs, idx.postings, cfg, idx.n_docs)
-        assert distributed.alpha == pytest.approx(collected.alpha, rel=1e-9)
-        assert distributed.beta == pytest.approx(collected.beta, rel=1e-9)
-        assert distributed.base_rate == pytest.approx(collected.base_rate, rel=1e-9)
+        got = IB._sample_pseudo_query_scores(
+            docs, idx.postings, idx.config.n_buckets, idx.n_docs
+        )
+        want = sample_pseudo_query_scores(oracle, corpus)
+        assert len(got) == len(want) == 50
+        assert [g.tolist() for g in got] == [w.tolist() for w in want]
+        for method in ("percentile", "mixture", "elbow"):
+            cfg = replace(idx.config, alpha=None, beta=None, base_rate="auto",
+                          base_rate_method=method)
+            params = IB._estimate_params(spark, docs, idx.postings, cfg, idx.n_docs)
+            assert (params.alpha, params.beta) == estimate_alpha_beta(pq), method
+            assert params.base_rate == estimate_base_rate(pq, idx.n_docs, method), method
+
+    def test_params_sum_negative_impacts_before_filter(self, spark, tmp_path):
+        """Robertson impacts of a term in most docs are negative; a
+        pseudo-query's doc score is the sum of all its terms' impacts,
+        and only then is ``score > 0`` applied (the kernel's order)."""
+        texts = [
+            f"common filler{i % 5} rare{i % 7} w{i}" if i % 4 else f"rare{i % 7} solo{i}"
+            for i in range(40)
+        ]
+        cfg = IndexConfig(method="robertson", base_rate="auto")
+        idx = build_index(spark, pages_df_from_texts(spark, texts), str(tmp_path / "rob"), cfg)
+        corpus = [tokenize(t) for t in texts]
+        oracle = BM25Oracle(method="robertson")
+        oracle.index(corpus)
+        pq = sample_pseudo_query_scores(oracle, corpus)
+        a, b = estimate_alpha_beta(pq)
+        assert (idx.params.alpha, idx.params.beta) == (a, b)
+        assert idx.params.base_rate == estimate_base_rate(pq, 40, "percentile")
+        # the case bites: dropping the negative impacts first changes
+        # the sample
+        positive = copy.copy(oracle)
+        positive._impacts = {
+            t: {d: v for d, v in m.items() if v > 0} for t, m in oracle._impacts.items()
+        }
+        assert min(min(m.values()) for m in oracle._impacts.values()) < 0
+        assert estimate_alpha_beta(sample_pseudo_query_scores(positive, corpus)) != (a, b)
 
     def test_resume_without_fused_columns_raises(self, spark, tmp_path):
         """A posting_lists checkpoint without the term_stats columns
@@ -256,6 +302,43 @@ class TestBuild:
         )
         assert viol == 0
 
+    def test_load_without_stage_names_it(self, spark, six_index, tmp_path):
+        """An index missing a stage directory fails to load with a
+        ValueError naming the stage and the remedy."""
+        import re
+        import shutil
+
+        path = str(tmp_path / "no_lists")
+        shutil.copytree(six_index.path, path)
+        shutil.rmtree(f"{path}/posting_lists")
+        with pytest.raises(
+            ValueError, match=re.escape(f"{path}/posting_lists") + ".*posting_lists.*force=True"
+        ):
+            load_index(spark, path)
+
+    def test_resume_rebuilds_stage_without_data(self, spark, six_index, tmp_path):
+        """A stage directory holding its manifest but no parquet files
+        is not a complete checkpoint: the resume rebuilds it."""
+        import shutil
+
+        from bayesian_bm25_spark.plans import checkpoint as ckpt
+
+        path = str(tmp_path / "no_data")
+        shutil.copytree(six_index.path, path)
+        stage_dir = f"{path}/term_stats"
+        for fn in os.listdir(stage_dir):
+            if fn != ckpt.MANIFEST_NAME:
+                os.remove(os.path.join(stage_dir, fn))
+        assert not ckpt.is_complete(stage_dir)
+        idx = build_index(
+            spark, pages_df_from_texts(spark, SIX_DOCS), path, six_index.config
+        )
+        assert ckpt.is_complete(stage_dir)
+        assert sorted(map(tuple, idx.term_stats.collect())) == sorted(
+            map(tuple, six_index.term_stats.collect())
+        )
+        assert load_index(spark, path).params == six_index.params
+
     def test_resume_from_checkpoint(self, spark, six_index):
         # a fresh build over the same path must reuse checkpoints (no pages needed)
         idx2 = load_index(spark, six_index.path)
@@ -276,18 +359,10 @@ class TestBuild:
             old = {**IndexConfig(k1=2.0).to_dict(), **removed}
             assert IndexConfig.from_dict(old) == IndexConfig(k1=2.0)
 
-    @pytest.mark.parametrize("distributed", [False, True])
-    def test_user_base_rate_survives_empty_sample(
-        self, spark, tmp_path, monkeypatch, distributed
-    ):
+    def test_user_base_rate_survives_empty_sample(self, spark, tmp_path):
         """Every robertson impact of 4 identical docs is ≤ 0, so no
         pseudo-query score passes the score > 0 filter; the user-set
-        base rate must still reach params on both the collect and the
-        distributed path."""
-        from bayesian_bm25_spark.operators import index_build as IB
-
-        if distributed:
-            monkeypatch.setattr(IB, "_PARAMS_COLLECT_MAX", 0)
+        base rate must still reach params."""
         pages = pages_df_from_texts(spark, ["same words here"] * 4)
         idx = build_index(
             spark, pages, str(tmp_path / "rob"),

@@ -122,6 +122,41 @@ class TestScoringPlan:
         assert "term_bucket" in scan.split("]")[0]
 
 
+class TestParamsPlan:
+    def test_params_run_two_jobs_and_fetch_without_exchange(
+        self, spark, plan_idx, monkeypatch
+    ):
+        """Parameter estimation is the sample collect plus ONE Arrow
+        fetch of the pseudo-query terms' postings rows; the fetch is a
+        filtered scan with no join, aggregation or exchange."""
+        from bayesian_bm25_spark.operators import index_build as IB
+
+        frames = []
+        frame_cls = type(plan_idx.postings)
+        to_arrow = frame_cls.toArrow
+
+        def spy(df):
+            frames.append(df)
+            return to_arrow(df)
+
+        monkeypatch.setattr(frame_cls, "toArrow", spy)
+        docs = spark.read.parquet(f"{plan_idx.path}/docs")
+        cfg = IndexConfig(base_rate="auto")
+        sc = spark.sparkContext
+        sc.setJobGroup("params", "pseudo-query parameter estimation")
+        try:
+            params = IB._estimate_params(spark, docs, plan_idx.postings, cfg, plan_idx.n_docs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert params.base_rate is not None
+        assert len(sc.statusTracker().getJobIdsForGroup("params")) <= 2
+        assert len(frames) == 1
+        plan = plan_of(frames[0])
+        assert "Exchange" not in plan, plan
+        assert "Join" not in plan and "Aggregate" not in plan, plan
+
+
 @pytest.fixture(scope="class")
 def warm_scorer(spark, tmp_path_factory):
     """A facade over 300 Zipf pages with its scoring layout warmed."""
