@@ -1085,9 +1085,9 @@ GROUP BY n_name
 
 
 def q_compressed_postings(spark, sf_dir):
-    """Distributed posting-list encode/decode round-trip (codec + partial
-    merge are binary/iterative — checked by pytest goldens; here the
-    driver gets a rows-only sanity check)."""
+    """Distributed posting-list encode/decode round-trip (the codec's
+    bytes are checked by pytest goldens; here the driver gets a
+    rows-only sanity check)."""
     import pandas as pd
 
     from bayesian_bm25_spark.kernel.postings_codec import (

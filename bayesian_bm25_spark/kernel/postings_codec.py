@@ -102,18 +102,3 @@ def decode_posting_list(buf: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]
     doc_ids = np.cumsum(gaps.astype(np.int64))
     return doc_ids, tfs, impacts
 
-
-def merge_posting_lists(segments: list[bytes]) -> bytes:
-    """Merge partition-local segments into one global sorted list.
-
-    Segments come from the salted build (disjoint doc_id sets per term),
-    so a sort-by-doc_id concatenation is an exact merge.
-    """
-    parts = [decode_posting_list(s) for s in segments if s]
-    if not parts:
-        return struct.pack("<III", 0, 0, 0)
-    doc_ids = np.concatenate([p[0] for p in parts])
-    tfs = np.concatenate([p[1] for p in parts])
-    impacts = np.concatenate([p[2] for p in parts])
-    order = np.argsort(doc_ids, kind="stable")
-    return encode_posting_list(doc_ids[order], tfs[order], impacts[order])

@@ -9,12 +9,13 @@ the build resumes from any boundary — north rule):
                     → join df per term [one shuffle, AQE-broadcast when
                     small] → eager impact column (codegen) → laid out by
                     term_bucket = pmod(xxhash64(term), n_buckets)
-      └─ posting_lists: map-side varbyte partials → ONE shuffle of
-                    compressed bytes → term merge, written once  [north
-                    rule storage tier; queries default to flat postings].
-                    The merge holds every term's decoded arrays, so it
-                    also emits df/max/min impact, the θ-pass
-                    prefix_cutoff and per-block maxima as extra columns
+      └─ posting_lists: ONE shuffle by term + sort by (term, doc_id)
+                    → each term's run delta+varbyte-encoded once,
+                    written once  [north rule storage tier; queries
+                    default to flat postings].  The encode holds every
+                    term's arrays, so it also emits df/max/min impact,
+                    the θ-pass prefix_cutoff and per-block maxima as
+                    extra columns
          └─ term_stats: column-pruned select of posting_lists (payload
                     bytes unread)
          └─ block_max:  explode of the posting_lists block arrays (same)
@@ -23,10 +24,9 @@ the build resumes from any boundary — north rule):
                     and α/β/base-rate on the driver (mirrors the
                     reference protocol and the numpy kernel)
 
-Skew: the Zipf head ("the"-like terms) is handled twice — the flat
-postings shuffle relies on AQE skew-join splitting, and the compressed
-build encodes one partial per Arrow batch of the postings scan, so the
-head term reaches its merge task pre-chunked.
+Skew: the Zipf head ("the"-like terms) — the flat postings shuffle
+relies on AQE skew-join splitting; in the compressed build the head term
+is one sorted run in one encode task, streamed in Arrow batches.
 """
 
 from __future__ import annotations
@@ -52,10 +52,7 @@ from pyspark.sql.types import (
 
 from bayesian_bm25_spark.functions import columns as C
 from bayesian_bm25_spark.kernel.bm25 import estimate_alpha_beta, estimate_base_rate
-from bayesian_bm25_spark.kernel.postings_codec import (
-    decode_posting_list,
-    encode_posting_list,
-)
+from bayesian_bm25_spark.kernel.postings_codec import encode_posting_list
 from bayesian_bm25_spark.kernel.transform import TransformParams
 from bayesian_bm25_spark.plans import checkpoint as ckpt
 
@@ -554,7 +551,7 @@ def _build_index_impl(
     # serializing; outputs land in separate checkpoint dirs, so
     # resumability is unchanged.
     #
-    # The compressed-list merge decodes every term's full posting
+    # The compressed-list encode holds every term's full posting
     # arrays, so term_stats and block_max are derived from ITS
     # checkpoint's extra columns (a tiny column-pruned scan — the
     # payload bytes are never read): one bulk postings pass.
@@ -632,25 +629,17 @@ def _build_index_impl(
     )
 
 
-_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("df_partial", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
-)
-
 _LIST_SCHEMA = StructType(
     [
         StructField("term", StringType(), False),
         StructField("df", LongType(), False),
         StructField("payload", BinaryType(), False),
-        # term_stats / block_max by-products of the merge (see
-        # _build_posting_lists): the merge decodes every
-        # term's full (doc_id, tf, impact) arrays anyway, so these are
-        # O(1) extra numpy reductions per term.  Readers of the
-        # compressed lists select (term, df, payload) and never pay for
-        # them (parquet column pruning).
+        # term_stats / block_max by-products of the encode (see
+        # _build_posting_lists): it holds every term's full (doc_id, tf,
+        # impact) arrays anyway, so these are O(1) extra numpy
+        # reductions per term.  Readers of the compressed lists select
+        # (term, df, payload) and never pay for them (parquet column
+        # pruning).
         StructField("max_impact", DoubleType(), False),
         StructField("min_impact", DoubleType(), False),
         StructField("prefix_cutoff", DoubleType(), False),
@@ -664,44 +653,52 @@ def _run_grouped(batches, key_cols: list[str], flush):
     """Iterate Arrow batches of partition-sorted rows, yielding one output
     row per contiguous key-group via ``flush(group_slice_dict)``.
 
-    The partition is sorted by ``key_cols``, so groups are contiguous; a
-    pending tail (group possibly split across batch boundaries) is
-    carried over and prepended to the next batch.  Group boundaries are
-    found with numpy on the key columns and each group is handed to
-    ``flush`` as a dict of numpy array slices — no per-group pandas
+    The partition is sorted by ``key_cols``, so groups are contiguous.
+    The open group (possibly split across batch boundaries) is held as a
+    list of per-batch slices and concatenated once, when it closes, so a
+    group spanning many batches costs time linear in its length.  Group
+    boundaries are found with numpy on the key columns and each group is
+    handed to ``flush`` as a dict of numpy arrays — no per-group pandas
     machinery (a per-group applyInPandas pays ~1 ms interpreter overhead
     per term; this pays ~µs).
     """
     import numpy as np
 
-    pending: pd.DataFrame | None = None
+    def close(parts: list[dict]) -> dict:
+        return {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
+
+    pending: list[dict] = []  # slices of the open group, in batch order
     for pdf in batches:
-        if pending is not None:
-            pdf = pd.concat([pending, pdf], ignore_index=True)
         n = len(pdf)
         if n == 0:
-            pending = None
             continue
         cols = {c: pdf[c].to_numpy() for c in pdf.columns}
         change = np.zeros(n, dtype=bool)
-        change[0] = True
+        change[0] = not pending or any(
+            cols[k][0] != pending[-1][k][-1] for k in key_cols
+        )
         for k in key_cols:
             kv = cols[k]
             change[1:] |= kv[1:] != kv[:-1]
         starts = np.nonzero(change)[0]
+        if len(starts) == 0:  # the whole batch continues the open group
+            pending.append(cols)
+            continue
+        out = []
+        if pending:
+            if starts[0] > 0:
+                pending.append({c: v[: starts[0]] for c, v in cols.items()})
+            out.append(flush(close(pending)))
+        out += [
+            flush({c: v[a:b] for c, v in cols.items()})
+            for a, b in zip(starts[:-1], starts[1:])
+        ]
         # hold back the last group — it may continue in the next batch
-        tail_start = starts[-1]
-        pending = pdf.iloc[tail_start:]
-        if tail_start > 0:
-            bounds = list(starts[starts < tail_start]) + [tail_start]
-            out = [
-                flush({c: v[a:b] for c, v in cols.items()})
-                for a, b in zip(bounds[:-1], bounds[1:])
-            ]
+        pending = [{c: v[starts[-1]:] for c, v in cols.items()}]
+        if out:
             yield pd.DataFrame(out)
-    if pending is not None and len(pending):
-        cols = {c: pending[c].to_numpy() for c in pending.columns}
-        yield pd.DataFrame([flush(cols)])
+    if pending:
+        yield pd.DataFrame([flush(close(pending))])
 
 
 def _derive_term_stats(posting_lists: DataFrame, n_buckets: int) -> DataFrame:
@@ -738,112 +735,39 @@ def _build_posting_lists(
 ) -> DataFrame:
     """Compressed posting-list construction (north rule).
 
-    Encode varbyte partials MAP-SIDE — each Arrow batch of the postings
-    scan is numpy-sorted by (term, doc_id) and every term-run encoded
-    into a delta+varbyte partial with its partial df — then ONE shuffle
-    by term carries only compressed bytes (~10.5 B/posting vs ~35-40
-    B/posting struct rows) into the merge, which decodes,
-    argsort-stitches the doc-disjoint partials, re-encodes the global
-    list (byte-identical to ``encode_posting_list`` over the term's
-    doc-sorted postings) and computes the term_stats / block_max
-    columns from the arrays it has decoded.  The merge is an
-    Arrow-batched ``mapInPandas`` over partition-sorted runs: per-batch
-    Python, per-group numpy.  The artifact is written once; the
-    postings checkpoint stays the recovery point.
+    One plan: the postings rows (term, doc_id, tf, impact) are
+    repartitioned by term and sorted by (term, doc_id) within each
+    partition — Spark's shuffle and external sort do the ordering in the
+    JVM — and an Arrow-batched ``mapInPandas`` encodes each term's
+    contiguous run once with ``encode_posting_list`` (per-batch Python,
+    per-group numpy), computing the term_stats / block_max columns from
+    the same arrays.  The artifact is written once; the postings
+    checkpoint stays the recovery point.
 
-    Skew needs no salt: the Zipf head term arrives pre-chunked, one
-    partial per Arrow batch per read split, and the map side is balanced
-    by the scan's byte-sized splits.
+    Skew needs no salt: the Zipf head term is one sorted run in one
+    task, streamed in Arrow batches that ``_run_grouped`` concatenates
+    once.  The price is shuffle bytes: raw rows cost 12-15 B/posting
+    after lz4 on Zipf pages, 1.5-2.5× what map-side varbyte partials
+    would.
 
     A resumed checkpoint without the term_stats columns (written before
-    the merge produced them) raises ``ValueError``: the index must be
+    the encode produced them) raises ``ValueError``: the index must be
     rebuilt with ``force=True``."""
     list_dir = os.path.join(path, "posting_lists")
     postings_dir = os.path.join(path, "postings")
-    # over-partition the python merge stage 4× so uneven per-term list
+    # over-partition the python encode stage 4× so uneven per-term list
     # lengths don't leave cores idle behind stragglers
     n_part = max(spark.sparkContext.defaultParallelism * 4, 8)
 
-    def encode_partials(batches):
-        # Map-side partial encode: sort each Arrow batch by
-        # (term, doc_id) with numpy, encode every term-run into a
-        # varbyte partial.  No pre-shuffle, no partition-wide sort —
-        # (term, doc) rows are globally unique, so batch-local runs are
-        # doc-disjoint across batches and the merge's argsort stitches
-        # them exactly (byte-identical final lists).
-        import numpy as np
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            term = pdf["term"].to_numpy()
-            order = np.lexsort((pdf["doc_id"].to_numpy(), term))
-            term = term[order]
-            doc = pdf["doc_id"].to_numpy()[order]
-            tf = pdf["tf"].to_numpy()[order]
-            imp = pdf["impact"].to_numpy()[order]
-            change = np.ones(n, dtype=bool)
-            change[1:] = term[1:] != term[:-1]
-            starts = np.nonzero(change)[0]
-            ends = np.append(starts[1:], n)
-            yield pd.DataFrame(
-                {
-                    "term": term[starts],
-                    "df_partial": (ends - starts).astype("int64"),
-                    "payload": [
-                        encode_posting_list(doc[a:b], tf[a:b], imp[a:b])
-                        for a, b in zip(starts, ends)
-                    ],
-                }
-            )
-
-    def build_partials() -> DataFrame:
-        # The encode is a pure map — its parallelism is the read split
-        # count.  The postings checkpoint is ~32 MB/file, so at the
-        # build-wide 16m cap a small corpus reads in a handful of
-        # splits; clone a session with a byte-sized split cap
-        # (~bytes/(4·parallelism), floored at 2m) so every core encodes.
-        cap = max(
-            2 << 20,
-            _dir_bytes(postings_dir)
-            // max(4 * spark.sparkContext.defaultParallelism, 8),
-        )
-        enc_spark = spark.newSession()
-        enc_spark.conf.set("spark.sql.files.maxPartitionBytes", str(cap))
-        # openCostInBytes must ride along (ADVICE r6): the clone reverts
-        # to the 4 MiB default otherwise, which exceeds the 2 MiB cap
-        # floor and turns every small postings file into its own task
-        for k in ("spark.sql.shuffle.partitions",
-                  "spark.sql.files.openCostInBytes",
-                  "spark.sql.parquet.compression.codec",
-                  "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version"):
-            v = spark.conf.get(k, None)
-            if v is not None:
-                enc_spark.conf.set(k, v)
-        src = enc_spark.read.parquet(postings_dir).select(
-            "term", "doc_id", "tf", "impact"
-        )
-        return src.mapInPandas(encode_partials, schema=_PARTIAL_SCHEMA)
-
-    def merge_runs(batches):
-        # Merge + stats in one pass: identical bytes to
-        # merge_posting_lists (same decode → stable argsort → encode),
-        # plus the term_stats / block_max columns computed from the
-        # arrays the merge has already decoded, so neither stage scans
-        # the postings checkpoint.
+    def encode_runs(batches):
+        # rows arrive sorted by (term, doc_id): each term's run is its
+        # whole doc-sorted list, encoded once, and the term_stats /
+        # block_max columns come from the same arrays
         import numpy as np
 
         def flush(g: dict) -> dict:
-            # every partial holds >= 1 posting, so n >= 1 below
-            parts = [decode_posting_list(bytes(x)) for x in g["payload"]]
-            doc_ids = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            impacts = np.concatenate([p[2] for p in parts])
-            order = np.argsort(doc_ids, kind="stable")
-            doc_ids, tfs, impacts = doc_ids[order], tfs[order], impacts[order]
+            doc_ids, impacts = g["doc_id"], g["impact"]
             n = len(doc_ids)
-            payload = encode_posting_list(doc_ids, tfs, impacts)
             # prefix_cutoff = the B-th largest impact (ties at the
             # boundary share the same value, so sorting by impact alone
             # is exact)
@@ -852,8 +776,8 @@ def _build_posting_lists(
             starts = np.nonzero(np.r_[True, bids[1:] != bids[:-1]])[0]
             return {
                 "term": g["term"][0],
-                "df": int(g["df_partial"].sum()),
-                "payload": payload,
+                "df": n,
+                "payload": encode_posting_list(doc_ids, g["tf"], impacts),
                 "max_impact": float(imp_desc[0]),
                 "min_impact": float(imp_desc[-1]),
                 "prefix_cutoff": float(imp_desc[min(PREFIX_LEN, n) - 1]),
@@ -865,13 +789,13 @@ def _build_posting_lists(
 
     def build_lists() -> DataFrame:
         return (
-            build_partials()
+            postings.select("term", "doc_id", "tf", "impact")
             .repartition(n_part, "term")
-            .sortWithinPartitions("term")
-            .mapInPandas(merge_runs, schema=_LIST_SCHEMA)
+            .sortWithinPartitions("term", "doc_id")
+            .mapInPandas(encode_runs, schema=_LIST_SCHEMA)
         )
 
-    ckpt.run_stage(
+    pl = ckpt.run_stage(
         spark,
         list_dir,
         build_lists,
@@ -879,9 +803,6 @@ def _build_posting_lists(
         inputs=[postings_dir],
         force=force,
     )
-    # hand the checkpoint back on the caller's session so downstream
-    # lineage never references the split-cap clone
-    pl = spark.read.parquet(list_dir)
     if "max_impact" not in pl.columns:
         raise ValueError(
             f"{list_dir} is a posting_lists checkpoint without the "

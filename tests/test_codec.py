@@ -1,4 +1,4 @@
-"""Posting-list codec round-trips and merge correctness."""
+"""Posting-list codec round-trips."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import numpy as np
 from bayesian_bm25_spark.kernel.postings_codec import (
     decode_posting_list,
     encode_posting_list,
-    merge_posting_lists,
     varbyte_decode,
     varbyte_encode,
 )
@@ -55,19 +54,3 @@ def test_empty_posting_list():
     d, t, i = decode_posting_list(buf)
     assert len(d) == len(t) == len(i) == 0
 
-
-def test_merge_disjoint_segments():
-    rng = np.random.default_rng(1)
-    ids = np.sort(rng.choice(10**6, 900, replace=False)).astype(np.int64)
-    tfs = rng.integers(1, 9, 900)
-    imps = rng.uniform(0, 5, 900)
-    # salt-split into 3 disjoint segments like the build does
-    segs = []
-    for s in range(3):
-        m = ids % 3 == s
-        segs.append(encode_posting_list(ids[m], tfs[m], imps[m]))
-    merged = merge_posting_lists(segs)
-    d, t, i = decode_posting_list(merged)
-    assert np.array_equal(d, ids)
-    assert np.array_equal(t, tfs)
-    np.testing.assert_array_equal(i, imps)

@@ -98,7 +98,7 @@ class TestBuild:
         """Every posting_lists row is byte-identical to encode_posting_list
         over that term's postings rows sorted by doc_id on the driver —
         on a Zipf corpus whose head terms span several Arrow batches, so
-        the merge stitches many map-side partials per term."""
+        the encode concatenates each head term's run across batches."""
         from bayesian_bm25_spark.kernel.postings_codec import encode_posting_list
 
         idx = zipf3k_index
@@ -118,12 +118,12 @@ class TestBuild:
         }
         assert got == expect
         # many 10k-row Arrow batches, and the head term is in most docs:
-        # its list is stitched from many partials
+        # its sorted run reaches the encode split across batches
         assert len(flat) > 10 * 10_000
         assert max(df for df, _ in got.values()) > idx.n_docs // 2
 
     def test_term_artifacts_equal_pandas_reference_zipf(self, zipf3k_index):
-        """term_stats / block_max (derived from the posting-list merge)
+        """term_stats / block_max (derived from the posting-list encode)
         equal a pandas reduction of the index's own postings rows, with
         the reference's block size and θ-pass prefix depth of 128:
         df, term_bucket, max/min impact, prefix_cutoff = the
@@ -822,6 +822,54 @@ class TestAssignDocIds:
         pages = generate_pages(spark, 100, seed=1, num_partitions=4).drop("doc_id")
         plan = tokenize_pages(pages)._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in plan
+
+
+class TestRunGrouped:
+    """``_run_grouped`` (the posting-list encode and the simhash fold)
+    flushes the same groups however the sorted rows are cut into
+    batches."""
+
+    @staticmethod
+    def _flush_all(batches):
+        import pandas as pd
+
+        from bayesian_bm25_spark.operators.index_build import _run_grouped
+
+        def flush(g: dict) -> dict:
+            return {"term": g["term"][0], "k": int(g["k"][0]), "v": list(g["v"])}
+
+        outs = list(_run_grouped(iter(batches), ["term", "k"], flush))
+        return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
+
+    @pytest.mark.parametrize("size", [1, 2, 3, 5, 7, 10, 1000])
+    def test_any_batching_equals_one_batch(self, size):
+        import pandas as pd
+
+        # group lengths 5, 10, 3, 7, 25, 5 end on every 5th row at first:
+        # batch sizes 1 and 5 close groups exactly on a batch boundary;
+        # the 25-row group spans many small batches; ("b", 1) and
+        # ("b", 2) differ only in the second key column
+        lens = [("a", 0, 5), ("b", 1, 10), ("b", 2, 3), ("c", 0, 7),
+                ("d", 0, 25), ("e", 0, 5)]
+        rows = pd.DataFrame(
+            [(t, k, j) for t, k, n in lens for j in range(n)],
+            columns=["term", "k", "v"],
+        )
+        whole = self._flush_all([rows])
+        assert whole["term"].tolist() == [t for t, _, _ in lens]
+        assert [len(v) for v in whole["v"]] == [n for _, _, n in lens]
+        # an empty batch between two full ones changes nothing
+        batches = [rows.iloc[a:a + size] for a in range(0, len(rows), size)]
+        batches.insert(1, rows.iloc[:0])
+        got = self._flush_all(batches)
+        pd.testing.assert_frame_equal(got, whole)
+
+    def test_no_rows_flush_nothing(self):
+        import pandas as pd
+
+        empty = pd.DataFrame({"term": [], "k": [], "v": []})
+        assert self._flush_all([empty, empty]).empty
+        assert self._flush_all([]).empty
 
 
 class TestRobertsonPrunedPaths:

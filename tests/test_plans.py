@@ -157,6 +157,32 @@ class TestParamsPlan:
         assert "Join" not in plan and "Aggregate" not in plan, plan
 
 
+class TestPostingListsPlan:
+    def test_one_term_exchange_and_one_python_map(self, spark, plan_idx, monkeypatch):
+        """The posting_lists build is the sort-based inversion: one
+        ``hashpartitioning(term, n_part)`` exchange, a sort, and ONE
+        ``MapInPandas`` that encodes each term's run.  A second Python
+        pass (a map-side pre-encode) or a second exchange fails it."""
+        import re
+
+        from bayesian_bm25_spark.operators import index_build as IB
+
+        frames = []
+
+        def spy(spark_, stage_dir, build_fn, **kw):
+            frames.append(build_fn())
+            return spark_.read.parquet(stage_dir)
+
+        monkeypatch.setattr(IB.ckpt, "run_stage", spy)
+        IB._build_posting_lists(spark, plan_idx.postings, plan_idx.path, True)
+        assert len(frames) == 1
+        plan = plan_of(frames[0])
+        n_part = max(spark.sparkContext.defaultParallelism * 4, 8)
+        assert plan.count("MapInPandas") == 1, plan
+        assert len(re.findall(r"Exchange ", plan)) == 1, plan
+        assert re.search(rf"Exchange hashpartitioning\(term#\d+, {n_part}\)", plan), plan
+
+
 @pytest.fixture(scope="class")
 def warm_scorer(spark, tmp_path_factory):
     """A facade over 300 Zipf pages with its scoring layout warmed."""

@@ -1,4 +1,4 @@
-"""Hypothesis property tests: codec round-trip/merge, transform bounds
+"""Hypothesis property tests: codec round-trip, transform bounds
 and monotonicity, fusion algebra identities.  Pure-numpy kernels — no
 Spark session, so these run in seconds and fuzz a much wider input space
 than the golden fixtures."""
@@ -13,7 +13,6 @@ from bayesian_bm25_spark.kernel.combine import log_odds_conjunction, prob_and, p
 from bayesian_bm25_spark.kernel.postings_codec import (
     decode_posting_list,
     encode_posting_list,
-    merge_posting_lists,
 )
 from bayesian_bm25_spark.kernel.transform import TransformParams, clamp01, logit, sigmoid
 
@@ -53,20 +52,6 @@ def test_codec_roundtrip_identity(pl):
     # whatever the codec stores, decode must be deterministic and ordered
     d2, t2, i2 = decode_posting_list(encode_posting_list(doc_ids, tfs, impacts))
     np.testing.assert_array_equal(i, i2)
-
-
-@settings(max_examples=30, deadline=None)
-@given(posting_list(), st.integers(min_value=2, max_value=5))
-def test_codec_merge_equals_whole(pl, n_splits):
-    doc_ids, tfs, impacts = pl
-    cuts = np.linspace(0, len(doc_ids), n_splits + 1).astype(int)
-    segments = [
-        encode_posting_list(doc_ids[a:b], tfs[a:b], impacts[a:b])
-        for a, b in zip(cuts[:-1], cuts[1:])
-        if b > a
-    ]
-    whole = encode_posting_list(doc_ids, tfs, impacts)
-    assert merge_posting_lists(segments) == whole
 
 
 @settings(max_examples=100, deadline=None)
