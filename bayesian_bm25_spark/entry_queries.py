@@ -27,6 +27,7 @@ from bayesian_bm25_spark.operators import query as Q
 from bayesian_bm25_spark.operators.index_build import (
     IndexConfig,
     _local_tf,
+    _scan_bytes,
     compute_postings,
 )
 
@@ -45,56 +46,37 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-def _spread(df: DataFrame, sf_dir: str, table: str, min_bytes: int = 0) -> DataFrame:
+def _spread(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     """Fan a small single-split table out across the cluster before
-    heavy narrow work.
+    heavy narrow work.  ``df`` is a plain parquet read of a table.
 
     A table under one ~128 MB split scans as ONE task, and every narrow
     op Spark fuses into that scan stage — tokenize, shingle md5s, the
     Arrow token-count / SimHash-fold passes — then runs on a single core
     of the whole cluster (guide §2.6 idle capacity / §6 input splits).
-    The repartition only fires when the input is provably smaller than
-    ~8 MB/core, so on a corpus that splits naturally it is a no-op and
-    never adds a shuffle at scale.
+    The repartition only fires when the input, as Spark's relation
+    statistics size it, is smaller than ~8 MB/core, so on a corpus that
+    splits naturally it is a no-op and never adds a shuffle at scale.
 
     ``min_bytes``: below this input size the spread is skipped — for
     call sites whose per-byte work is light enough that one warm task
     beats the exchange + task-scheduling overhead (measured: the
     _corpus_postings family runs ~25% faster unspread at sf0.1, but a
     multi-MB single split would serialize its Arrow token-count pass)."""
-    import os
-
     p = df.sparkSession.sparkContext.defaultParallelism
-    path = f"{sf_dir}/{table}.parquet"
-    try:
-        size = (
-            os.path.getsize(path)
-            if os.path.isfile(path)
-            else sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(path)
-                for f in files
-            )
-        )
-    except OSError:
-        return df
+    size = _scan_bytes(df)
     if size < min_bytes or size >= (8 << 20) * p:
         return df
     return df.repartition(p)
 
 
-def _docs_tokens(
-    spark: SparkSession, sf_dir: str, spread: bool = False, min_bytes: int = 0
-) -> DataFrame:
-    # ``spread`` is opt-in: only entries whose scan stage carries heavy
-    # fused work (Arrow UDF passes, 8-way shingle md5s) buy enough
-    # parallelism to pay for the extra exchange; plain JVM column math
-    # over a 0.6 MB table is faster as one task (measured: dedup_exact
-    # +0.6s with a blanket spread).
-    raw = _read(spark, sf_dir, "documents")
-    if spread:
-        raw = _spread(raw, sf_dir, "documents", min_bytes=min_bytes)
-    return _tokenized(raw)
+def _docs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # not spread: only entries whose scan stage carries heavy fused work
+    # (Arrow UDF passes, 8-way shingle md5s) buy enough parallelism to
+    # pay for the extra exchange, and they call ``_spread`` themselves;
+    # plain JVM column math over a 0.6 MB table is faster as one task
+    # (measured: dedup_exact +0.6s with a blanket spread).
+    return _tokenized(_read(spark, sf_dir, "documents"))
 
 
 def _tokenized(raw: DataFrame) -> DataFrame:
@@ -111,22 +93,20 @@ def _corpus_postings(spark: SparkSession, sf_dir: str, method: str = "lucene") -
     docs = _tokenized(raw)
     row = docs.agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("a")).collect()[0]
     n_docs, avgdl = int(row["n"]), float(row["a"])
-    # The postings plan consumes tf TWICE (per-term df agg + probe side
-    # of the df join) and Spark does not dedupe common subplans — so the
-    # Arrow token-count pass would run twice per query.  Persist it for
-    # the duration of the query (the same reuse build_index applies;
-    # values and the oracle SQL are unchanged).  The cache is NOT
-    # reclaimed when the returned frames are dropped: it stays until it
-    # is unpersisted or the session ends.  ONLY the tf input is spread, and
-    # only when the table exceeds 4 MB: the stats agg and query-side
+    # tf is cached so that the entries of one pass that call this helper
+    # share one Arrow token-count pass: their plans match the same cached
+    # plan.  The cache is NOT reclaimed when the returned frames are
+    # dropped: it stays until ``spark.catalog.clearCache()`` or the end
+    # of the session.  ONLY the tf input is spread, and only when the
+    # table exceeds 4 MB: the stats agg, the df count and the query-side
     # tokenize are cheap JVM work, and at sub-MB inputs the exchange +
     # worker-pool fork overhead measurably exceeds the single-warm-task
     # cost (5-session A/B, family total 16.2-17.8s unspread vs
     # 21.8-28.6s spread at sf0.1) — while a multi-MB single split would
     # serialize the Arrow token-count pass.
-    tf_docs = _tokenized(_spread(raw, sf_dir, "documents", min_bytes=4 << 20))
+    tf_docs = _tokenized(_spread(raw, min_bytes=4 << 20))
     tf = _local_tf(tf_docs).persist()
-    postings = compute_postings(tf, n_docs, avgdl, IndexConfig(method=method))
+    postings = compute_postings(docs, tf, n_docs, avgdl, IndexConfig(method=method))
     return docs, postings, n_docs, avgdl
 
 
@@ -624,7 +604,7 @@ def q_cosine_topk(spark, sf_dir):
     emb_raw = _read(spark, sf_dir, "embeddings")
     # big (scan) side spread across the cluster; the broadcast query
     # side stays on the raw read (tiny, no shuffle in the broadcast prep)
-    emb = _spread(emb_raw, sf_dir, "embeddings")
+    emb = _spread(emb_raw)
     queries = emb_raw.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
@@ -711,7 +691,7 @@ def q_minhash_signatures(spark, sf_dir):
     """
     # spread: the shingle build + 8 md5s per shingle are heavy fused
     # scan-stage work — single-task on a single-split table otherwise
-    docs = _docs_tokens(spark, sf_dir, spread=True)
+    docs = _tokenized(_spread(_read(spark, sf_dir, "documents")))
     sh = _shingles(docs)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{k}|"), F.col("shingle")))).alias(f"mh{k}")
@@ -1327,7 +1307,7 @@ def q_multimodal_features(spark, sf_dir):
     string) and have an exact DuckDB oracle."""
     from bayesian_bm25_spark.operators.multimodal import extract_stub_features
 
-    docs = _spread(_read(spark, sf_dir, "documents"), sf_dir, "documents").select(
+    docs = _spread(_read(spark, sf_dir, "documents")).select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("blob"), F.lit("text/plain").alias("mime")
     )
     return extract_stub_features(docs).select(
@@ -1583,7 +1563,7 @@ def q_multifield_topk(spark, sf_dir):
     for name, fdocs in (("title", title), ("body", body)):
         row = fdocs.agg(F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("a")).collect()[0]
         postings = compute_postings(
-            _local_tf(fdocs), int(row["n"]), float(row["a"]), IndexConfig()
+            fdocs, _local_tf(fdocs), int(row["n"]), float(row["a"]), IndexConfig()
         )
         parts[name] = Q.with_probability(
             Q.score_queries(postings, queries), params, float(row["a"])
@@ -2744,7 +2724,7 @@ def q_simhash_fingerprints(spark, sf_dir):
     # on a single-split input its whole scan→explode→fold pipeline runs
     # as one task; the repartition parallelizes it without touching the
     # operator's no-exchange property (a doc's rows stay contiguous)
-    docs = _spread(_read(spark, sf_dir, "documents"), sf_dir, "documents").select(
+    docs = _spread(_read(spark, sf_dir, "documents")).select(
         "doc_id", "text"
     )
     return simhash64(docs)

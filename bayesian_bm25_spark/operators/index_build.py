@@ -6,8 +6,9 @@ the build resumes from any boundary — north rule):
     pages(url, warc_ts, html, text, lang)
       └─ docs:      tokenize (Arrow p_udf-free: pure Column split/filter)
       └─ postings:  row-local tf count (mapInPandas, no shuffle)
-                    → join df per term [one shuffle, AQE-broadcast when
-                    small] → eager impact column (codegen) → laid out by
+                    → join df per term, counted from the docs' distinct
+                    tokens [one small shuffle, broadcast when small]
+                    → eager impact column (codegen) → laid out by
                     term_bucket = pmod(xxhash64(term), n_buckets)
       └─ posting_lists: ONE shuffle by term + sort by (term, doc_id)
                     → each term's run delta+varbyte-encoded once,
@@ -292,26 +293,30 @@ def _append_tf(old_postings: DataFrame, new_docs: DataFrame) -> DataFrame:
 
 
 def compute_postings(
-    tf: DataFrame, n_docs: int, avgdl: float, cfg: IndexConfig | None = None
+    docs: DataFrame, tf: DataFrame, n_docs: int, avgdl: float, cfg: IndexConfig
 ) -> DataFrame:
     """Lazy postings plan from tf facts (doc_id, doc_len, term, tf) —
     ``_local_tf(docs)`` for a fresh corpus, ``_append_tf`` for an append.
 
-    Per-term df agg (small) → join (AQE broadcasts small vocab; one
-    shuffle of the tf rows otherwise) → eager impact column (pure
-    codegen) → term-bucket layout column for partition pruning.  The
-    plan reads ``tf`` twice (df agg + join probe), so the build persists
-    ``tf`` before executing it.
+    df is a fact of the docs, the number of token arrays holding the
+    term, so it is counted from ``docs`` in the JVM (explode of the
+    distinct tokens → per-term count) and ``tf`` is read once, as the
+    probe side of the df join: the Arrow tf pass runs once with nothing
+    cached.  Then an eager impact column (pure codegen) and the
+    term-bucket layout column for partition pruning.
 
     The df join is not forced to a broadcast: its term-hash output
     partitioning keeps the written files term-clustered, and a forced
     broadcast made every downstream postings scan ~3× slower
     (BENCH/BASELINE.md r6 addendum §6)."""
-    cfg = cfg or IndexConfig()
-    tf = tf.select("doc_id", "doc_len", "term", "tf")
-    df_per_term = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    df_per_term = (
+        docs.select(F.explode(F.array_distinct("tokens")).alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
     return (
-        tf.join(df_per_term, "term")
+        tf.select("doc_id", "doc_len", "term", "tf")
+        .join(df_per_term, "term")
         .withColumn(
             "impact",
             C.bm25_impact(
@@ -378,28 +383,21 @@ def _read_split_cap(spark: SparkSession, cap: str = "16m"):
                 spark.conf.unset(k)
 
 
-def _dir_bytes(d: str) -> int:
-    """Total bytes of the files directly under a checkpoint dir (the
-    local-FS analog of a catalog's table-size stat — used to size write
-    parallelism; on object storage swap in the listing API)."""
-    total = 0
-    for root, _, files in os.walk(d):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
+def _scan_bytes(df: DataFrame) -> int:
+    """Input bytes of a plain parquet read, from the relation statistics
+    Spark plans with (the data files' byte sum, on any Hadoop path)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _postings_write_tasks(docs_bytes: int, default_parallelism: int) -> int:
     """Task count for the postings stage's narrow coalesce.
 
-    The cached-tf probe pins the write stage's task count, and that
-    stage carries the post-cache compute (broadcast df join + impact +
-    parquet encode), not just the file write — so under-sizing it idles
-    cores, and over-sizing it multiplies files by the 32 term_bucket
-    partition dirs.  Three regimes:
+    A broadcast df join keeps the docs scan's partitioning, so this
+    coalesce pins the write stage's task count, and that stage carries
+    the Arrow tf pass, the df join, the impact column and the parquet
+    encode, not just the file write — so under-sizing it idles cores,
+    and over-sizing it multiplies files by the 32 term_bucket partition
+    dirs.  Three regimes:
 
     - big corpus (bytes/32MB >= cluster width): byte-proportional —
       already at least one well-filled task per core;
@@ -432,22 +430,30 @@ def _build_postings_stages(
     docs stage (``docs_fn()`` → doc_id, tokens, doc_len) →
     ``corpus_stats.json`` → postings stage.
 
-    ``tf_source`` (doc_id, doc_len, term, tf) replaces ``_local_tf`` of
-    the docs — the append path passes ``_append_tf``.  Returns (docs,
-    n_docs, avgdl, postings, serial phase seconds)."""
+    The postings stage reads tf once and counts df from the docs stage
+    (``compute_postings``), so nothing is cached.  ``tf_source``
+    (doc_id, doc_len, term, tf) replaces ``_local_tf`` of the docs — the
+    append path passes ``_append_tf``, and its df comes from the
+    combined docs stage.  Returns (docs, n_docs, avgdl, postings, serial
+    phase seconds)."""
     os.makedirs(path, exist_ok=True)
     serial_phase: dict[str, float] = {}
     t_phase = time.time()
 
     docs_dir = os.path.join(path, "docs")
+    config = cfg.to_dict()
+    # corpus_stats.json describes the docs stage, so it is recomputed
+    # whenever that stage is rebuilt
+    docs_reused = not force and ckpt.is_complete(docs_dir, config)
     docs = ckpt.run_stage(
-        spark, docs_dir, docs_fn, stage="docs", inputs=docs_inputs, force=force
+        spark, docs_dir, docs_fn, stage="docs", inputs=docs_inputs,
+        force=not docs_reused, config=config,
     )
     serial_phase["docs"] = round(time.time() - t_phase, 2)
     t_phase = time.time()
 
     stats_file = os.path.join(path, "corpus_stats.json")
-    if os.path.exists(stats_file) and not force:
+    if docs_reused and os.path.exists(stats_file):
         with open(stats_file) as f:
             stats = json.load(f)
     else:
@@ -462,31 +468,20 @@ def _build_postings_stages(
     t_phase = time.time()
 
     postings_dir = os.path.join(path, "postings")
-    # The postings plan consumes tf TWICE — once under the df agg, once
-    # as the probe side of the (broadcast) df join — and Spark does not
-    # dedupe common subplans, so without a persist the Arrow token-count
-    # pass (and at cluster scale, the docs-checkpoint scan feeding it)
-    # executes twice per build.  Persist tf across the two consumers for
-    # the duration of the stage write; released right after.  Resume
-    # path (checkpoint exists) never builds the plan, so nothing is
-    # cached there.
-    tf_cached = None
 
     def build_postings() -> DataFrame:
-        nonlocal tf_cached
-        src = tf_source if tf_source is not None else _local_tf(docs)
-        tf_cached = src.persist()
-        out = compute_postings(tf_cached, n_docs, avgdl, cfg)
-        # The cached probe pins the write's task count to the cache
-        # partition count (32 tasks × 32 bucket dirs = 1024 tiny files
-        # at 50k docs — measured to double every downstream postings
-        # scan via per-file open cost).  No exchange sits between cache
-        # and write for AQE to right-size, so size it ourselves from
+        tf = tf_source if tf_source is not None else _local_tf(docs)
+        out = compute_postings(docs, tf, n_docs, avgdl, cfg)
+        # The broadcast df join keeps the probe's partitioning, the docs
+        # scan's splits, and each write task writes up to 32 bucket
+        # files (1024 tiny files at 32 tasks — measured to double every
+        # downstream postings scan via per-file open cost).  No exchange
+        # sits before the write for AQE to right-size, so size it from
         # the docs checkpoint bytes: ~32 MB of docs per write task, a
         # NARROW coalesce (no shuffle) — small corpora get few
         # well-filled files, big corpora keep proportional parallelism.
         n_write = _postings_write_tasks(
-            _dir_bytes(docs_dir), spark.sparkContext.defaultParallelism
+            _scan_bytes(docs), spark.sparkContext.defaultParallelism
         )
         return out.coalesce(int(n_write))
 
@@ -498,13 +493,12 @@ def _build_postings_stages(
         inputs=[docs_dir],
         partition_by=["term_bucket"],
         force=force,
+        config=config,
         # the postings table is the QUERY-hot scan: snappy decodes ~3x
         # cheaper than zstd, and every retrieval pass reads it — the
         # zstd build default applies only to write-once checkpoints
         compression="snappy",
     )
-    if tf_cached is not None:
-        tf_cached.unpersist()
     serial_phase["postings"] = round(time.time() - t_phase, 2)
     return docs, n_docs, avgdl, postings, serial_phase
 
@@ -518,8 +512,8 @@ def build_index(
 ) -> BM25Index:
     """Build (or resume building) the index at ``path``.
 
-    Raises ``ValueError`` when resuming a posting_lists checkpoint that
-    lacks the term_stats columns; rebuild with ``force=True``."""
+    A resume reuses each stage checkpoint whose manifest records the
+    same config, and rebuilds the others (``ckpt.is_complete``)."""
     cfg = config or IndexConfig()
     with _read_split_cap(spark):
         return _build_index_impl(
@@ -559,6 +553,7 @@ def _build_index_impl(
 
     t_group0 = time.time()
     phase_sec: dict[str, float] = {}
+    config = cfg.to_dict()
 
     def timed(name: str, fn):
         t0 = time.time()
@@ -577,7 +572,7 @@ def _build_index_impl(
         )
         posting_lists = timed(
             "compressed_lists",
-            lambda: _build_posting_lists(spark, postings, path, force),
+            lambda: _build_posting_lists(spark, postings, path, force, config),
         )
         f_ts = pool.submit(
             timed, "term_stats",
@@ -585,6 +580,7 @@ def _build_index_impl(
                 spark, os.path.join(path, "term_stats"),
                 lambda: _derive_term_stats(posting_lists, cfg.n_buckets),
                 stage="term_stats", inputs=[list_dir], force=force,
+                config=config,
             ),
         )
         f_bm = pool.submit(
@@ -593,6 +589,7 @@ def _build_index_impl(
                 spark, os.path.join(path, "block_max"),
                 lambda: _derive_block_max(posting_lists),
                 stage="block_max", inputs=[list_dir], force=force,
+                config=config,
             ),
         )
         term_stats, block_max = f_ts.result(), f_bm.result()
@@ -731,7 +728,7 @@ def _derive_block_max(posting_lists: DataFrame) -> DataFrame:
 
 
 def _build_posting_lists(
-    spark: SparkSession, postings: DataFrame, path: str, force: bool
+    spark: SparkSession, postings: DataFrame, path: str, force: bool, config: dict | None = None
 ) -> DataFrame:
     """Compressed posting-list construction (north rule).
 
@@ -750,9 +747,8 @@ def _build_posting_lists(
     after lz4 on Zipf pages, 1.5-2.5× what map-side varbyte partials
     would.
 
-    A resumed checkpoint without the term_stats columns (written before
-    the encode produced them) raises ``ValueError``: the index must be
-    rebuilt with ``force=True``."""
+    ``config`` is the build config the stage manifest records (see
+    ``ckpt.run_stage``)."""
     list_dir = os.path.join(path, "posting_lists")
     postings_dir = os.path.join(path, "postings")
     # over-partition the python encode stage 4× so uneven per-term list
@@ -795,21 +791,15 @@ def _build_posting_lists(
             .mapInPandas(encode_runs, schema=_LIST_SCHEMA)
         )
 
-    pl = ckpt.run_stage(
+    return ckpt.run_stage(
         spark,
         list_dir,
         build_lists,
         stage="posting_lists",
         inputs=[postings_dir],
         force=force,
+        config=config,
     )
-    if "max_impact" not in pl.columns:
-        raise ValueError(
-            f"{list_dir} is a posting_lists checkpoint without the "
-            "term_stats columns (written by an older build); rebuild the "
-            "index with build_index(..., force=True)"
-        )
-    return pl
 
 
 def _params_from_scores(
@@ -917,8 +907,8 @@ def add_documents(
     Spark the rebuild is ``build_index``'s checkpointed DAG over `old
     docs ∪ new docs`: the old tokenization is reused (never recomputed),
     the old postings seed the merged tf (``_append_tf``: only the new
-    docs' tokens are counted), and df/avgdl/impact are plain
-    re-aggregations over it.  Every stage at ``new_path`` is rewritten.
+    docs' tokens are counted), and df/avgdl are re-aggregated from the
+    combined docs stage.  Every stage at ``new_path`` is rewritten.
     New doc_ids continue after the old range.  Postings and compressed
     list bytes equal a fresh ``build_index`` of the combined corpus
     (pytest-enforced).

@@ -2,12 +2,12 @@
 
 Every index-build stage writes its output as parquet plus a
 ``_manifest.json`` recording the stage name, input manifests (lineage),
-row count and per-partition row counts.  A re-run that finds a
-complete manifest skips recomputation and reads the parquet back — the
-build is resumable from any stage boundary, which is the
-checkpoint/lineage contract of the north rule.  (The reference has a
-single in-memory build; persistence there is a .npz cache, reference
-benchmarks/hybrid_beir.py:303-373.)
+the build config, row count and per-partition row counts.  A re-run
+that finds a complete manifest of the same config skips recomputation
+and reads the parquet back — the build is resumable from any stage
+boundary, which is the checkpoint/lineage contract of the north rule.
+(The reference has a single in-memory build; persistence there is a
+.npz cache, reference benchmarks/hybrid_beir.py:303-373.)
 """
 
 from __future__ import annotations
@@ -25,11 +25,22 @@ def manifest_path(stage_dir: str) -> str:
     return os.path.join(stage_dir, MANIFEST_NAME)
 
 
-def is_complete(stage_dir: str) -> bool:
+def is_complete(stage_dir: str, config: dict | None = None) -> bool:
     """The stage has its manifest AND at least one parquet file: a
     manifest over a directory whose data is gone makes the stage
-    rebuild, instead of failing to infer a schema on read."""
-    return os.path.exists(manifest_path(stage_dir)) and any(
+    rebuild, instead of failing to infer a schema on read.
+
+    With ``config`` (a build config, as ``run_stage`` takes it), the
+    manifest must also record that config: a stage built under another
+    config, or whose manifest records none, is incomplete."""
+    if not os.path.exists(manifest_path(stage_dir)):
+        return False
+    # compared as the manifest reads back: a tuple is stored as a list
+    if config is not None and read_manifest(stage_dir).get("config") != json.loads(
+        json.dumps(config)
+    ):
+        return False
+    return any(
         fn.endswith(".parquet") for _root, _dirs, files in os.walk(stage_dir) for fn in files
     )
 
@@ -58,6 +69,7 @@ def write_stage(
     inputs: list[str] | None = None,
     partition_by: list[str] | None = None,
     compression: str | None = None,
+    config: dict | None = None,
 ) -> DataFrame:
     """Write ``df`` as a checkpointed stage and return the re-read frame.
 
@@ -91,6 +103,7 @@ def write_stage(
         "n_read_partitions": len(part_counts),
         "partition_row_counts": part_counts,
         "inputs": inputs or [],
+        "config": config,
     }
     with open(manifest_path(stage_dir), "w") as f:
         json.dump(manifest, f, indent=2)
@@ -107,9 +120,13 @@ def run_stage(
     partition_by: list[str] | None = None,
     force: bool = False,
     compression: str | None = None,
+    config: dict | None = None,
 ) -> DataFrame:
-    """Execute ``build_fn()`` unless a complete checkpoint already exists."""
-    if not force and is_complete(stage_dir):
+    """Execute ``build_fn()`` unless a complete checkpoint already
+    exists.  ``config`` (the build config, JSON-serializable) is
+    recorded in the manifest, and a checkpoint built under another
+    config is rebuilt."""
+    if not force and is_complete(stage_dir, config):
         return spark.read.parquet(stage_dir)
     return write_stage(
         build_fn(),
@@ -118,4 +135,5 @@ def run_stage(
         inputs=inputs,
         partition_by=partition_by,
         compression=compression,
+        config=config,
     )

@@ -222,11 +222,10 @@ class TestBuild:
         assert min(min(m.values()) for m in oracle._impacts.values()) < 0
         assert estimate_alpha_beta(sample_pseudo_query_scores(positive, corpus)) != (a, b)
 
-    def test_resume_without_fused_columns_raises(self, spark, tmp_path):
-        """A posting_lists checkpoint without the term_stats columns
-        (written before the merge produced them) must fail the resume
-        loudly, naming the path and the remedy."""
-        import re
+    def test_resume_rebuilds_checkpoint_without_fused_columns(self, spark, tmp_path):
+        """A posting_lists checkpoint without the term_stats columns,
+        whose manifest records no config (an older build's), is not a
+        complete checkpoint: the resume rebuilds it, columns included."""
         import shutil
 
         from bayesian_bm25_spark.plans import checkpoint as ckpt
@@ -235,6 +234,7 @@ class TestBuild:
         pages = pages_df_from_texts(spark, SIX_DOCS)
         cfg = IndexConfig(alpha=1.0, beta=1.0)
         idx = build_index(spark, pages, path, cfg)
+        lists = sorted(map(tuple, idx.posting_lists.collect()))
         list_dir = f"{path}/posting_lists"
         cut_dir = str(tmp_path / "cut")
         ckpt.write_stage(
@@ -243,10 +243,33 @@ class TestBuild:
         )
         shutil.rmtree(list_dir)
         shutil.move(cut_dir, list_dir)
-        with pytest.raises(ValueError, match=re.escape(list_dir) + ".*force=True"):
-            build_index(spark, pages, path, cfg)
-        rebuilt = build_index(spark, pages, path, cfg, force=True)
-        assert "max_impact" in rebuilt.posting_lists.columns
+        assert not ckpt.is_complete(list_dir, cfg.to_dict())
+        resumed = build_index(spark, pages, path, cfg)
+        assert "max_impact" in resumed.posting_lists.columns
+        assert sorted(map(tuple, resumed.posting_lists.collect())) == lists
+
+    def test_scan_bytes_of_path_and_uri(self, spark, six_index):
+        """The size of a stage read comes from Spark's relation
+        statistics: the parquet files' byte sum, the same for a plain
+        path and its file:// URI, so _spread decides alike on both."""
+        from bayesian_bm25_spark.entry_queries import _spread
+        from bayesian_bm25_spark.operators.index_build import _scan_bytes
+
+        stage_dir = f"{six_index.path}/postings"
+        plain = spark.read.parquet(stage_dir)
+        uri = spark.read.parquet(f"file://{stage_dir}")
+        size = _scan_bytes(plain)
+        assert size == sum(
+            os.path.getsize(os.path.join(root, fn))
+            for root, _dirs, files in os.walk(stage_dir)
+            for fn in files
+            if fn.endswith(".parquet")
+        )
+        assert _scan_bytes(uri) == size
+        # a small table is spread, unless it is under min_bytes
+        assert _spread(plain) is not plain and _spread(uri) is not uri
+        assert _spread(plain, min_bytes=size + 1) is plain
+        assert _spread(uri, min_bytes=size + 1) is uri
 
     def test_corpus_stats(self, six_index):
         corpus = [tokenize(d) for d in SIX_DOCS]
@@ -784,6 +807,62 @@ class TestWarmEqualsCold:
         assert (ids >= 0).any()
         assert ids.tolist() == cold_ids.tolist()
         assert probs.tolist() == cold_p.tolist()
+
+
+class TestChangedConfigResume:
+    """A resume at a built path under another config equals a fresh
+    build of that config: each stage manifest records its build config,
+    and a stage built under another one is rebuilt."""
+
+    BASE = IndexConfig(base_rate="auto")
+
+    @pytest.fixture(scope="class")
+    def base(self, spark, tmp_path_factory):
+        pages = pages_df_from_texts(spark, SIX_DOCS)
+        path = str(tmp_path_factory.mktemp("idx_resume_base"))
+        build_index(spark, pages, path, self.BASE)
+        return pages, path
+
+    @pytest.mark.parametrize(
+        "change",
+        [
+            {"method": "robertson"},
+            {"k1": 2.0},
+            {"stemmer": "porter"},
+            # a tuple is stored as a JSON list; it must still match.
+            # Dropping words also changes avgdl, so corpus_stats.json
+            # must be recomputed.
+            {"stopwords": ("the", "a", "cat")},
+        ],
+        ids=["method", "k1", "stemmer", "stopwords"],
+    )
+    def test_resume_equals_fresh_build(self, spark, tmp_path, base, change):
+        import dataclasses
+        import json
+        import shutil
+
+        from bayesian_bm25_spark.plans import checkpoint as ckpt
+
+        pages, base_path = base
+        cfg = dataclasses.replace(self.BASE, **change)
+        resumed_path, fresh_path = str(tmp_path / "resumed"), str(tmp_path / "fresh")
+        shutil.copytree(base_path, resumed_path)
+        resumed = build_index(spark, pages, resumed_path, cfg)
+        fresh = build_index(spark, pages, fresh_path, cfg)
+
+        def rows(idx):
+            cols = ["term", "doc_id", "tf", "doc_len", "df", "impact"]
+            return sorted(map(tuple, idx.postings.select(cols).collect()))
+
+        def meta(path):
+            with open(f"{path}/params.json") as f:
+                return json.load(f)
+
+        assert rows(resumed) == rows(fresh)
+        assert rows(resumed) != rows(load_index(spark, base_path))  # the change bites
+        assert meta(resumed_path) == meta(fresh_path)
+        for stage in ("docs", "postings", "posting_lists", "term_stats", "block_max"):
+            assert ckpt.is_complete(f"{resumed_path}/{stage}", cfg.to_dict())
 
 
 class TestAssignDocIds:

@@ -183,6 +183,42 @@ class TestPostingListsPlan:
         assert re.search(rf"Exchange hashpartitioning\(term#\d+, {n_part}\)", plan), plan
 
 
+class TestPostingsPlan:
+    def test_one_tf_pass_and_nothing_cached(self, spark, tmp_path, monkeypatch):
+        """The postings stage reads tf once: its frame has ONE
+        ``MapInPandas`` (the Arrow tf count) and no cached relation, and
+        the broadcast side of the df join counts df from the docs'
+        exploded tokens.  The build leaves no RDD persisted."""
+        import re
+
+        from bayesian_bm25_spark.operators import index_build as IB
+
+        frames = []
+        run_stage = IB.ckpt.run_stage
+
+        def spy(spark_, stage_dir, build_fn, **kw):
+            if kw["stage"] != "postings":
+                return run_stage(spark_, stage_dir, build_fn, **kw)
+            frames.append(build_fn())
+            return run_stage(spark_, stage_dir, lambda: frames[0], **kw)
+
+        monkeypatch.setattr(IB.ckpt, "run_stage", spy)
+        persisted = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        build_index(
+            spark, generate_pages(spark, 300, seed=5, num_partitions=4),
+            str(tmp_path / "idx"), IndexConfig(alpha=1.0, beta=1.0, base_rate=0.05),
+        )
+        assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == persisted
+        assert len(frames) == 1
+        plan = plan_of(frames[0])
+        assert plan.count("MapInPandas") == 1, plan
+        assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
+        build_side = plan[plan.index("BroadcastExchange"):]
+        assert re.search(r"Generate explode\(array_distinct\(tokens", build_side), plan
+        assert re.search(r"FileScan parquet \[tokens#\d+\]", build_side), plan
+        assert "MapInPandas" not in build_side, plan
+
+
 @pytest.fixture(scope="class")
 def warm_scorer(spark, tmp_path_factory):
     """A facade over 300 Zipf pages with its scoring layout warmed."""
